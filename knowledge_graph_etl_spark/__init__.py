@@ -15,7 +15,13 @@ queries (SURVEY.md). This package re-expresses that, Spark-first:
   * :mod:`.pipeline`   — full-refresh lifecycle runner
   * :mod:`.extensions` — beyond-reference ops: dedup, similarity search,
     text analysis, multimodal plumbing
+  * :mod:`.zipcache`   — stops Python workers re-reading ``pyspark.zip``
+    on every task; installed on import
 """
+
+from . import zipcache
+
+zipcache.install()
 
 from .ingest import json_to_quads, parse_document, parse_json_text, quadify
 from .operators import BGP, Var, construct, pattern, star_scan

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +33,11 @@ from .terms import QUAD_COLUMNS, QUAD_SCHEMA
 _PART_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^\x7f') | frozenset(
     chr(c) for c in range(1, 32)
 )
+
+
+# apply_delta's batch directory under _compact_tmp/: '=' is always
+# escaped in a graph's tmp name, so the two can never collide
+_BATCH_PREFIX = "delta="
 
 
 def _escape_partition_value(value: str) -> str:
@@ -233,39 +239,24 @@ class GraphStore:
         gains its missing verb; the reference workload is insert-only but
         any update user hits DELETE right after INSERT).
 
-        Parquet stores are copy-on-write at partition granularity: each
-        affected graph is rewritten minus the batch through the SAME
-        crash-safe commit-marker protocol as ``optimize`` — a reader never
-        sees a half-deleted graph, and a crash at any point recovers to
-        either the old or the new complete generation. ``target_graphs``
-        bounds the rewrite exactly like ``insert``'s anti-join pruning."""
+        Parquet stores are copy-on-write at partition granularity: the
+        affected graphs are rewritten minus the batch by
+        :meth:`apply_delta` with no inserts, so a reader never sees a
+        half-deleted graph and a crash at any point recovers each graph
+        to either its old or its new complete generation.
+        ``target_graphs`` bounds the rewrite exactly like ``insert``'s
+        anti-join pruning; a graph left with no quads loses its
+        partition."""
         self._pred_stats = None
         batch = del_quads.select(*QUAD_COLUMNS)
         if self.path:
-            self._recover_compactions()
-            if target_graphs is not None:
-                graphs = list(target_graphs)
-            else:
-                graphs = [r["g"] for r in batch.select("g").distinct().collect()]
-            graphs = [g for g in graphs if g in set(self.list_graphs())]
-            if len(graphs) > 1:
-                # the per-graph rewrites re-evaluate the batch; pin it so a
-                # batch lazily reading graph A can't observe A's rewrite
-                # while graph B is being processed
-                batch = batch.localCheckpoint(eager=True)
-            for gname in graphs:
-                remaining = self.graph(gname).alias("ex").join(
-                    batch.where(F.col("g") == gname).alias("dl"),
-                    on=_quad_eq_cond("ex", "dl"),
-                    how="left_anti",
-                )
-                esc = _escape_partition_value(gname)
-                tmp_g = os.path.join(self.path, "_compact_tmp", esc)
-                marker = os.path.join(self.path, "_compact_tmp", esc + ".COMMIT")
-                remaining.drop("g").write.mode("overwrite").parquet(tmp_g)
-                with open(marker, "x"):
-                    pass
-                self._complete_swap(gname)
+            if target_graphs is None:
+                target_graphs = [
+                    r["g"] for r in batch.select("g").distinct().collect()
+                ]
+            self.apply_delta(
+                batch, self.spark.createDataFrame([], QUAD_SCHEMA), target_graphs
+            )
         elif self._mem is not None:
             remaining = self._mem.alias("ex").join(
                 batch.alias("dl"), on=_quad_eq_cond("ex", "dl"), how="left_anti"
@@ -284,12 +275,8 @@ class GraphStore:
         ins_quads: DataFrame,
         target_graphs: list[str],
     ) -> None:
-        """Fused DELETE + INSERT against the same graphs in ONE
-        copy-on-write rewrite per graph (r14, guide §2.4): the
-        incremental pipeline's apply phase paid a full partition rewrite
-        for the delete and then a second commit (set-dedup anti-join +
-        append) for the insert. Both touch the same partition, so one
-        pass writes the final generation directly:
+        """Fused DELETE + INSERT against the same graphs: the final
+        generation of every target graph is written directly,
 
             final = (stored ∖ deletes) ∪ (inserts ∖ stored)
 
@@ -298,49 +285,88 @@ class GraphStore:
         reference-counted incremental delete guarantees it: deletes =
         stale quads with NO support in the new ledger, inserts ⊆ the new
         ledger). ``ins_quads`` must also be duplicate-free (the caller
-        dedups), like ``batch_distinct``. Crash safety is the compaction
-        protocol's: write tmp → COMMIT marker → swap."""
+        dedups), like ``batch_distinct``.
+
+        Only rows whose ``g`` is in ``target_graphs`` count, in both
+        backends: delete and insert rows of any other graph are
+        discarded, and every other graph is left untouched.
+
+        Parquet stores build ONE plan over all target graphs and write
+        it in ONE ``partitionBy("g")`` job into a batch directory
+        ``_compact_tmp/delta=<uuid>``. Every read of the store and of
+        both batches finishes inside that job, before any graph is
+        swapped, so nothing needs pinning. Each graph's new directory
+        then goes through the compaction protocol (tmp → COMMIT → swap,
+        see :meth:`optimize`) one graph at a time; a graph with no
+        quads left loses its partition. Crash windows, all closed by
+        :meth:`_recover_compactions` on the next open:
+
+        * during or after the batch write, before a graph's COMMIT:
+          that graph keeps its old generation; the batch directory and
+          any uncommitted tmp are deleted;
+        * after a graph's COMMIT, before or during its swap: the swap is
+          replayed, so the graph ends at its new generation.
+
+        Each graph therefore ends at its old or its new generation,
+        never a mix; graphs committed before a crash keep their new one.
+        The batch name holds ``=``, which ``_escape_partition_value``
+        always escapes, so it can never be a graph's tmp name."""
         self._pred_stats = None
-        dels = del_quads.select(*QUAD_COLUMNS)
-        ins = ins_quads.select(*QUAD_COLUMNS)
+        targets = list(dict.fromkeys(target_graphs))
+        if not targets:
+            return
+        in_targets = F.col("g").isin(targets)
+        dels = del_quads.select(*QUAD_COLUMNS).where(in_targets)
+        ins = ins_quads.select(*QUAD_COLUMNS).where(in_targets)
         if not self.path:
-            # in-memory store: keep the two-step path (it is one cached
-            # materialization either way)
-            self.delete(dels, target_graphs=target_graphs)
-            self.insert(ins, target_graphs=target_graphs)
+            # in-memory store: the two-step path is one cached
+            # materialization either way
+            self.delete(dels)
+            self.insert(ins, target_graphs=targets)
             return
         self._recover_compactions()
-        existing = set(self.list_graphs())
-        if len(target_graphs) > 1:
-            # per-graph rewrites re-evaluate both batches — pin them
-            dels = dels.localCheckpoint(eager=True)
-            ins = ins.localCheckpoint(eager=True)
-        for gname in target_graphs:
-            g_ins = ins.where(F.col("g") == gname)
-            if gname not in existing:
-                # nothing stored: the insert batch IS the generation
-                g_ins.write.mode("append").partitionBy("g").parquet(self.path)
-                continue
-            remaining = self.graph(gname).alias("ex").join(
-                dels.where(F.col("g") == gname).alias("dl"),
-                on=_quad_eq_cond("ex", "dl"),
-                how="left_anti",
-            )
-            # inserts dedup against the PRE-delete store: disjointness of
-            # deletes and inserts makes that identical to post-delete
-            new_rows = g_ins.alias("nw").join(
-                self.graph(gname).alias("ex"),
-                on=_quad_eq_cond("nw", "ex"),
-                how="left_anti",
-            )
-            gen = remaining.unionByName(new_rows)
-            esc = _escape_partition_value(gname)
-            tmp_g = os.path.join(self.path, "_compact_tmp", esc)
-            marker = os.path.join(self.path, "_compact_tmp", esc + ".COMMIT")
-            gen.drop("g").write.mode("overwrite").parquet(tmp_g)
-            with open(marker, "x"):
-                pass
-            self._complete_swap(gname)
+        stored = set(self.list_graphs())
+        current = self.dataset([g for g in targets if g in stored])
+        remaining = current.alias("ex").join(
+            dels.alias("dl"), on=_quad_eq_cond("ex", "dl"), how="left_anti"
+        )
+        # inserts dedup against the PRE-delete store: disjointness of
+        # deletes and inserts makes that identical to post-delete. This
+        # second scan of the stored graphs keeps them the probe side of
+        # both joins; one anti-join against dels ∪ ins instead planned a
+        # sort-merge join that shuffled the stored rows, undoing
+        # optimize's subject clustering (+16% bytes per quad)
+        new_rows = ins.alias("nw").join(
+            current.alias("ex"), on=_quad_eq_cond("nw", "ex"), how="left_anti"
+        )
+        batch_dir = os.path.join(
+            self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
+        )
+        remaining.unionByName(new_rows).write.partitionBy("g").parquet(batch_dir)
+        written = {
+            _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
+            for name in os.listdir(batch_dir)
+            if name.startswith("g=")
+        }
+        for gname in targets:
+            if gname in written or gname in stored:
+                self._commit_generation(gname, written.get(gname))
+        shutil.rmtree(batch_dir)
+
+    def _commit_generation(self, gname: str, src: str | None) -> None:
+        """Make the directory ``src`` graph ``gname``'s generation through
+        the compaction protocol; ``src=None`` commits an empty generation,
+        which removes the partition."""
+        tmp_g = os.path.join(
+            self.path, "_compact_tmp", _escape_partition_value(gname)
+        )
+        if src is None:
+            os.mkdir(tmp_g)
+        else:
+            os.rename(src, tmp_g)
+        with open(tmp_g + ".COMMIT", "x"):
+            pass
+        self._complete_swap(gname)
 
     _MEM_CONSOLIDATE_AT = 32
 
@@ -506,7 +532,11 @@ class GraphStore:
         tmp_g = os.path.join(self.path, "_compact_tmp", esc)
         marker = os.path.join(self.path, "_compact_tmp", esc + ".COMMIT")
         self._drop_partition(gname)
-        os.rename(tmp_g, os.path.join(self.path, f"g={esc}"))
+        if os.listdir(tmp_g):
+            os.rename(tmp_g, os.path.join(self.path, f"g={esc}"))
+        else:
+            # an empty generation: the graph has no quads left
+            os.rmdir(tmp_g)
         os.remove(marker)
         # leave _compact_tmp itself; empty dir, invisible to readers
 
@@ -529,7 +559,8 @@ class GraphStore:
                     # tmp into place and died before removing the marker
                     os.remove(os.path.join(tmp_root, name))
             elif name + ".COMMIT" not in names:
-                # uncommitted generation from a crashed write — roll back
+                # uncommitted generation from a crashed write, or an
+                # apply_delta batch directory — roll back
                 shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
 
     def register_view(self, name: str = "quads") -> None:

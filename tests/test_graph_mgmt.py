@@ -147,7 +147,8 @@ def test_apply_delta_equals_delete_then_insert(spark, tmp_path, mode):
     """GraphStore.apply_delta (r14): one copy-on-write rewrite must equal
     delete-then-insert for disjoint delete/insert batches, including
     no-op deletes (absent quads) and inserts already present (set
-    semantics), and must leave other graphs untouched."""
+    semantics), and must leave other graphs untouched: rows outside
+    ``target_graphs`` are discarded in both modes."""
     from knowledge_graph_etl_spark.terms import QUAD_SCHEMA
 
     def quad(g, s, o):
@@ -165,10 +166,12 @@ def test_apply_delta_equals_delete_then_insert(spark, tmp_path, mode):
         quad("urn:g:a", "urn:s:0", "v0"),
         quad("urn:g:a", "urn:s:1", "v1"),
         quad("urn:g:a", "urn:s:99", "absent"),  # no-op delete
+        quad("urn:g:b", "urn:s:keep", "vb"),  # outside target_graphs
     ]
     ins = [
         quad("urn:g:a", "urn:s:7", "new"),
         quad("urn:g:a", "urn:s:5", "v5"),  # already present: set no-op
+        quad("urn:g:c", "urn:s:8", "vc"),  # outside target_graphs
     ]
     d_df = spark.createDataFrame(dels, QUAD_SCHEMA)
     i_df = spark.createDataFrame(ins, QUAD_SCHEMA)
@@ -177,14 +180,15 @@ def test_apply_delta_equals_delete_then_insert(spark, tmp_path, mode):
     fused.store.apply_delta(d_df, i_df, target_graphs=["urn:g:a"])
 
     twostep = build(str(tmp_path / "t") if mode == "parquet" else None)
-    twostep.store.delete(d_df, target_graphs=["urn:g:a"])
-    twostep.store.insert(i_df, target_graphs=["urn:g:a"])
+    twostep.store.delete(d_df.where("g = 'urn:g:a'"), target_graphs=["urn:g:a"])
+    twostep.store.insert(i_df.where("g = 'urn:g:a'"), target_graphs=["urn:g:a"])
 
     def content(eng):
         return sorted(tuple(r) for r in eng.store.quads().collect())
 
     assert content(fused) == content(twostep)
     assert fused.store.graph("urn:g:b").count() == 1
+    assert "urn:g:c" not in fused.store.list_graphs()
     # set semantics held: s:5 appears once, s:7 added, s:0/s:1 gone
     a = {r["s"] for r in fused.store.graph("urn:g:a").collect()}
     assert a == {"urn:s:2", "urn:s:3", "urn:s:4", "urn:s:5", "urn:s:7"}
