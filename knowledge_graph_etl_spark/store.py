@@ -331,11 +331,11 @@ class GraphStore:
             dels.alias("dl"), on=_quad_eq_cond("ex", "dl"), how="left_anti"
         )
         # inserts dedup against the PRE-delete store: disjointness of
-        # deletes and inserts makes that identical to post-delete. This
-        # second scan of the stored graphs keeps them the probe side of
-        # both joins; one anti-join against dels ∪ ins instead planned a
-        # sort-merge join that shuffled the stored rows, undoing
-        # optimize's subject clustering (+16% bytes per quad)
+        # deletes and inserts makes that identical to post-delete. The
+        # stored graphs are scanned twice (here as the broadcast side) so
+        # that `remaining` streams them in file order: one anti-join
+        # against dels ∪ ins planned a sort-merge join instead, whose
+        # shuffle undid optimize's subject clustering (+16% bytes/quad)
         new_rows = ins.alias("nw").join(
             current.alias("ex"), on=_quad_eq_cond("nw", "ex"), how="left_anti"
         )
