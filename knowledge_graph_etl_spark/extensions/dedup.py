@@ -737,6 +737,14 @@ def resolve_clusters(
     convergence is 2-4 rounds; ``max_iter`` merely bounds adversarial
     path graphs, and hitting it raises rather than silently emitting
     unconverged labels.
+
+    ``pairs_canonical=True`` is the caller's promise that the pairs are
+    unique with ``a < b`` (as :func:`minhash_lsh_pairs` emits them); it
+    skips the self-loop filter and the edge ``distinct``. Breaking the
+    promise degrades silently rather than failing: the clusters stay
+    correct (min-label propagation is idempotent), but the checkpointed
+    edge RDD and every first-round shuffle grow with the duplicates, so
+    the contract can only be checked at the call site.
     """
     a_col, b_col = pair_cols
     e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))

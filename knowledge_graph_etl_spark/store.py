@@ -11,8 +11,11 @@ against the already-stored target graphs via a left-anti join that only scans
 the affected partitions.
 
 Scale posture: partition by ``g`` (few, large graphs → each graph is a
-directory of many files); inserts append files, never rewrite other graphs;
-``optimize`` compacts a graph's files. No driver-side collects anywhere.
+directory of many files); only ``insert`` appends files. Every mutation that
+replaces graphs — delete, apply_delta, CLEAR/DROP, COPY/MOVE and
+``optimize``'s compaction — goes through one copy-on-write commit
+(:meth:`GraphStore._commit_generation`), so a crash leaves each graph at its
+old or its new generation. No driver-side collects anywhere.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ _PART_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^\x7f') | frozenset(
 )
 
 
-# apply_delta's batch directory under _compact_tmp/: '=' is always
+# a rewrite's batch directory under _compact_tmp/: '=' is always
 # escaped in a graph's tmp name, so the two can never collide
 _BATCH_PREFIX = "delta="
 
@@ -239,35 +242,16 @@ class GraphStore:
         gains its missing verb; the reference workload is insert-only but
         any update user hits DELETE right after INSERT).
 
-        Parquet stores are copy-on-write at partition granularity: the
-        affected graphs are rewritten minus the batch by
-        :meth:`apply_delta` with no inserts, so a reader never sees a
-        half-deleted graph and a crash at any point recovers each graph
-        to either its old or its new complete generation.
-        ``target_graphs`` bounds the rewrite exactly like ``insert``'s
-        anti-join pruning; a graph left with no quads loses its
-        partition."""
-        self._pred_stats = None
+        :meth:`apply_delta` with no inserts. ``target_graphs`` bounds the
+        rewrite exactly like ``insert``'s anti-join pruning, and rows of
+        any other graph are discarded; ``None`` targets the graphs the
+        batch names. A graph left with no quads loses its partition."""
         batch = del_quads.select(*QUAD_COLUMNS)
-        if self.path:
-            if target_graphs is None:
-                target_graphs = [
-                    r["g"] for r in batch.select("g").distinct().collect()
-                ]
-            self.apply_delta(
-                batch, self.spark.createDataFrame([], QUAD_SCHEMA), target_graphs
-            )
-        elif self._mem is not None:
-            remaining = self._mem.alias("ex").join(
-                batch.alias("dl"), on=_quad_eq_cond("ex", "dl"), how="left_anti"
-            )
-            # materialize the remainder BEFORE releasing the pieces it reads
-            remaining = remaining.cache()
-            remaining.count()
-            for piece in self._mem_pieces:
-                piece.unpersist()
-            self._mem_pieces = [remaining]
-            self._mem = remaining
+        if target_graphs is None:
+            target_graphs = [r["g"] for r in batch.select("g").distinct().collect()]
+        self.apply_delta(
+            batch, self.spark.createDataFrame([], QUAD_SCHEMA), target_graphs
+        )
 
     def apply_delta(
         self,
@@ -289,44 +273,15 @@ class GraphStore:
 
         Only rows whose ``g`` is in ``target_graphs`` count, in both
         backends: delete and insert rows of any other graph are
-        discarded, and every other graph is left untouched.
-
-        Parquet stores build ONE plan over all target graphs and write
-        it in ONE ``partitionBy("g")`` job into a batch directory
-        ``_compact_tmp/delta=<uuid>``. Every read of the store and of
-        both batches finishes inside that job, before any graph is
-        swapped, so nothing needs pinning. Each graph's new directory
-        then goes through the compaction protocol (tmp → COMMIT → swap,
-        see :meth:`optimize`) one graph at a time; a graph with no
-        quads left loses its partition. Crash windows, all closed by
-        :meth:`_recover_compactions` on the next open:
-
-        * during or after the batch write, before a graph's COMMIT:
-          that graph keeps its old generation; the batch directory and
-          any uncommitted tmp are deleted;
-        * after a graph's COMMIT, before or during its swap: the swap is
-          replayed, so the graph ends at its new generation.
-
-        Each graph therefore ends at its old or its new generation,
-        never a mix; graphs committed before a crash keep their new one.
-        The batch name holds ``=``, which ``_escape_partition_value``
-        always escapes, so it can never be a graph's tmp name."""
-        self._pred_stats = None
+        discarded, and every other graph is left untouched. The final
+        generations are written and committed by :meth:`_rewrite`."""
         targets = list(dict.fromkeys(target_graphs))
         if not targets:
             return
         in_targets = F.col("g").isin(targets)
         dels = del_quads.select(*QUAD_COLUMNS).where(in_targets)
         ins = ins_quads.select(*QUAD_COLUMNS).where(in_targets)
-        if not self.path:
-            # in-memory store: the two-step path is one cached
-            # materialization either way
-            self.delete(dels)
-            self.insert(ins, target_graphs=targets)
-            return
-        self._recover_compactions()
-        stored = set(self.list_graphs())
-        current = self.dataset([g for g in targets if g in stored])
+        current = self.dataset(targets)
         remaining = current.alias("ex").join(
             dels.alias("dl"), on=_quad_eq_cond("ex", "dl"), how="left_anti"
         )
@@ -339,29 +294,81 @@ class GraphStore:
         new_rows = ins.alias("nw").join(
             current.alias("ex"), on=_quad_eq_cond("nw", "ex"), how="left_anti"
         )
-        batch_dir = os.path.join(
-            self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
-        )
-        remaining.unionByName(new_rows).write.partitionBy("g").parquet(batch_dir)
-        written = {
-            _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
-            for name in os.listdir(batch_dir)
-            if name.startswith("g=")
-        }
+        self._rewrite(targets, remaining.unionByName(new_rows))
+
+    def _rewrite(self, targets: list[str], rows: DataFrame | None) -> None:
+        """Each graph in ``targets`` becomes exactly its rows in ``rows``
+        (``None``: no rows; ``rows`` holds no other graph). Every mutation
+        that replaces graphs is a caller of this one method.
+
+        In memory: the other graphs plus ``rows`` are cached as the one
+        piece that replaces the store.
+
+        Parquet: ``rows`` is written in ONE ``partitionBy("g")`` job into
+        a batch directory ``_compact_tmp/delta=<uuid>``. Every read of
+        the store that ``rows`` makes finishes inside that job, before
+        any graph is swapped, so nothing needs pinning. Each target then
+        gets its new generation through :meth:`_commit_generation`, in
+        ``targets`` order; a stored target with no rows loses its
+        partition and an absent one is left alone. ``rows=None`` runs no
+        Spark job. A commit that died earlier in this process is first
+        finished or rolled back, like on open; a batch directory left by
+        a crash is deleted then like any uncommitted tmp."""
+        self._pred_stats = None
+        if not self.path:
+            if self._mem is None and rows is None:
+                return
+            kept = self.quads().where(~F.col("g").isin(targets))
+            merged = (kept if rows is None else kept.unionByName(rows)).cache()
+            merged.count()
+            self._replace_mem(merged)
+            return
+        self._recover_compactions()
+        stored = set(self.list_graphs())
+        batch_dir = self._batch_dir()
+        written = {}
+        if rows is not None:
+            rows.write.partitionBy("g").parquet(batch_dir)
+            written = {
+                _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
+                for name in os.listdir(batch_dir)
+                if name.startswith("g=")
+            }
         for gname in targets:
             if gname in written or gname in stored:
                 self._commit_generation(gname, written.get(gname))
-        shutil.rmtree(batch_dir)
+        shutil.rmtree(batch_dir, ignore_errors=True)
+
+    def _batch_dir(self) -> str:
+        """A fresh batch directory name under ``_compact_tmp``."""
+        return os.path.join(
+            self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
+        )
 
     def _commit_generation(self, gname: str, src: str | None) -> None:
-        """Make the directory ``src`` graph ``gname``'s generation through
-        the compaction protocol; ``src=None`` commits an empty generation,
-        which removes the partition."""
+        """Make the directory ``src`` graph ``gname``'s generation;
+        ``src=None`` commits an empty generation, which removes the
+        partition. The one commit protocol of the store:
+
+        1. move ``src`` to ``_compact_tmp/<escaped g>`` (``_``-prefixed,
+           so invisible to parquet readers);
+        2. create the marker ``<escaped g>.COMMIT`` — from this instant
+           the new generation is authoritative;
+        3. swap (:meth:`_complete_swap`): remove the live partition,
+           rename tmp into place (readers never see both generations),
+           remove the marker.
+
+        :meth:`_recover_compactions` closes every crash window on the
+        next open: before step 2 the live partition is untouched and the
+        tmp (or batch directory) is deleted; after it the swap is
+        replayed. Each graph therefore ends at its old or its new
+        generation, never a mix; graphs committed before a crash keep
+        their new one."""
         tmp_g = os.path.join(
             self.path, "_compact_tmp", _escape_partition_value(gname)
         )
         if src is None:
-            os.mkdir(tmp_g)
+            os.makedirs(tmp_g)
         else:
             os.rename(src, tmp_g)
         with open(tmp_g + ".COMMIT", "x"):
@@ -378,28 +385,36 @@ class GraphStore:
         count. Once the union is this deep, one consolidation pass costs a
         single scan of data that is already columnar-in-memory, and every
         later read replaces a 32-way union with one InMemoryRelation (with
-        exact stats, so join-side broadcast decisions stay sane). The new
-        cache is materialized BEFORE the pieces it reads are released."""
+        exact stats, so join-side broadcast decisions stay sane)."""
         merged = self._mem_pieces[0]
         for piece in self._mem_pieces[1:]:
             merged = merged.unionByName(piece)
         merged = merged.cache()
         merged.count()
+        self._replace_mem(merged)
+
+    def _replace_mem(self, sealed: DataFrame) -> None:
+        """Make the materialized ``sealed`` the whole in-memory store and
+        release the cached pieces it was built from. It must be
+        materialized first: releasing a piece a lazy plan still reads
+        would re-run that piece's lineage. Without this one pass per
+        rewrite, a full-refresh pipeline replayed N times would pin N
+        copies of the corpus in the cache."""
         for piece in self._mem_pieces:
             piece.unpersist()
-        self._mem_pieces = [merged]
-        self._mem = merged
+        self._mem_pieces = [sealed]
+        self._mem = sealed
 
     def clear(self, g: str) -> None:
         """``CLEAR SILENT GRAPH <g>`` (reference load_knowledge_graph.py:341):
-        empty the graph, no error if absent. Partition-level delete."""
-        self._drop_partition(g)
+        empty the graph, no error if absent."""
+        self._rewrite([g], None)
 
     def drop(self, g: str) -> None:
         """``DROP SILENT GRAPH <g>`` (reference load_knowledge_graph.py:623-665).
         Same storage action as CLEAR in a partitioned-table model; both verbs
         kept for API fidelity (SURVEY.md §2 ops 11-12)."""
-        self._drop_partition(g)
+        self._rewrite([g], None)
 
     def _relabeled(self, src: str, dst: str) -> DataFrame:
         """src graph's quads relabeled to dst (the ADD/MOVE/COPY payload)."""
@@ -417,38 +432,18 @@ class GraphStore:
 
     def copy_graph(self, src: str, dst: str) -> None:
         """``COPY GRAPH <src> TO GRAPH <dst>`` (§3.2.5): dst becomes an
-        exact copy of src (existing dst data removed first). The batch is
-        checkpointed BEFORE dst is cleared so a src==subset-of-dst read
-        never races the partition delete; src itself is a different
-        partition and is never touched."""
+        exact copy of src (existing dst data removed); src unchanged."""
         if src == dst:
             return
-        batch = self._relabeled(src, dst)
-        if not self._is_mem:
-            # parquet path: materialize the src read plan only as a plan —
-            # src partition files are untouched by clearing dst, so the
-            # lazy read stays valid; no checkpoint needed
-            self.clear(dst)
-            self.insert(batch, dedup_against_store=False, batch_distinct=True)
-            return
-        batch = batch.localCheckpoint(eager=True)
-        self.clear(dst)
-        self.insert(batch, dedup_against_store=False, batch_distinct=True)
+        self._rewrite([dst], self._relabeled(src, dst))
 
     def move_graph(self, src: str, dst: str) -> None:
-        """``MOVE GRAPH <src> TO GRAPH <dst>`` (§3.2.6): COPY then DROP the
-        source — safe in both backends because copy_graph's insert is an
-        eager action (parquet write / cache materialization), so dropping
-        src afterwards cannot unread the copied data. src==dst is a no-op
-        per the spec."""
+        """``MOVE GRAPH <src> TO GRAPH <dst>`` (§3.2.6): dst becomes src's
+        quads and src is dropped, in one rewrite. dst commits before src,
+        so a crash never loses a quad. src==dst is a no-op per the spec."""
         if src == dst:
             return
-        self.copy_graph(src, dst)
-        self.drop(src)
-
-    @property
-    def _is_mem(self) -> bool:
-        return not self.path
+        self._rewrite([dst, src], self._relabeled(src, dst))
 
     def checkpoint_mem(self) -> None:
         """Sever an in-memory store's plan tree: replace the lazy union of
@@ -467,13 +462,9 @@ class GraphStore:
         already flat) and empty stores. The caller owns the released
         blocks like any other checkpoint (harnesses sweep
         getPersistentRDDs)."""
-        if not self._is_mem or self._mem is None:
+        if self._mem is None:
             return
-        sealed = self._mem.localCheckpoint(eager=True)
-        for piece in self._mem_pieces:
-            piece.unpersist()
-        self._mem = sealed
-        self._mem_pieces = [sealed]
+        self._replace_mem(self._mem.localCheckpoint(eager=True))
 
     def optimize(
         self,
@@ -489,7 +480,11 @@ class GraphStore:
         carries tight min/max stats on ``s`` — constant-subject patterns
         and the build side of subject joins then prune row groups instead
         of scanning the graph. (At 100 TB this is what makes a 7-way BGP
-        self-join read a sliver of the store per pattern.)"""
+        self-join read a sliver of the store per pattern.)
+
+        Each graph is written on its own (without ``g``: the partition
+        directory name carries it) and committed through
+        :meth:`_commit_generation`."""
         if not self.path:
             return
         self._recover_compactions()
@@ -501,47 +496,32 @@ class GraphStore:
                 df = df.sortWithinPartitions(cluster_by)
             else:
                 df = df.repartition(target_files)
-            # Crash-safe protocol (write-ahead commit point; every crash
-            # window is covered by _recover_compactions on the next open):
-            #   1. write the compacted generation into _compact_tmp/<esc_g>
-            #      (a _-prefixed dir — invisible to parquet readers; the g
-            #      column is dropped because after the swap the partition
-            #      directory name carries it, as in every partitionBy write)
-            #   2. atomically create the COMMIT marker — from this instant
-            #      the compacted generation is authoritative
-            #   3. swap: drop the old partition dir, rename tmp into place
-            #      (one atomic rename — readers never see both generations,
-            #      so set semantics are preserved without read-side dedup),
-            #      remove the marker.
-            # Crash before 2 → old partition untouched, tmp is garbage
-            # (rolled back on recovery). Crash after 2 → recovery replays
-            # step 3. The old code's drop-then-append window (graph empty,
-            # data only in tmp) no longer exists.
-            esc = _escape_partition_value(gname)
-            tmp_g = os.path.join(self.path, "_compact_tmp", esc)
-            marker = os.path.join(self.path, "_compact_tmp", esc + ".COMMIT")
-            df.drop("g").write.mode("overwrite").parquet(tmp_g)
-            with open(marker, "x"):
-                pass
-            self._complete_swap(gname)
+            batch_dir = self._batch_dir()
+            df.drop("g").write.parquet(batch_dir)
+            self._commit_generation(gname, batch_dir)
 
     def _complete_swap(self, gname: str) -> None:
-        """Step 3 of the compaction protocol: replace the partition dir with
-        the committed compacted generation. Idempotent — safe to replay."""
+        """Step 3 of the commit protocol (see :meth:`_commit_generation`):
+        replace the partition dir with the committed generation; an empty
+        generation just removes it. Idempotent — safe to replay."""
         esc = _escape_partition_value(gname)
         tmp_g = os.path.join(self.path, "_compact_tmp", esc)
-        marker = os.path.join(self.path, "_compact_tmp", esc + ".COMMIT")
-        self._drop_partition(gname)
+        # the live partition is found by decoding on-disk names, so an
+        # escaping divergence can never leave stale rows to survive a
+        # "full refresh" CLEAR (ADVICE r01)
+        for name in os.listdir(self.path):
+            if name.startswith("g=") and _unescape_partition_value(name[2:]) == gname:
+                shutil.rmtree(os.path.join(self.path, name))
         if os.listdir(tmp_g):
             os.rename(tmp_g, os.path.join(self.path, f"g={esc}"))
         else:
             # an empty generation: the graph has no quads left
             os.rmdir(tmp_g)
-        os.remove(marker)
+        os.remove(tmp_g + ".COMMIT")
         # leave _compact_tmp itself; empty dir, invisible to readers
 
     def _recover_compactions(self) -> None:
-        """Finish or roll back compactions interrupted by a crash. A marker
+        """Finish or roll back commits interrupted by a crash. A marker
         file is the commit point: marker present → the tmp generation is
         authoritative (replay the swap); absent → the old partition is
         authoritative (tmp contents are garbage, discard them)."""
@@ -559,8 +539,8 @@ class GraphStore:
                     # tmp into place and died before removing the marker
                     os.remove(os.path.join(tmp_root, name))
             elif name + ".COMMIT" not in names:
-                # uncommitted generation from a crashed write, or an
-                # apply_delta batch directory — roll back
+                # uncommitted generation or batch directory from a
+                # crashed write — roll back
                 shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
 
     def register_view(self, name: str = "quads") -> None:
@@ -626,31 +606,6 @@ class GraphStore:
 
     def _has_data(self) -> bool:
         return any(n.startswith("g=") for n in os.listdir(self.path))
-
-    def _drop_partition(self, g: str) -> None:
-        self._pred_stats = None
-        if self.path:
-            part = os.path.join(self.path, f"g={_escape_partition_value(g)}")
-            shutil.rmtree(part, ignore_errors=True)
-            # Belt-and-braces: locate the partition by decoding on-disk names
-            # too, so an escaping divergence can never leave stale rows to
-            # survive a "full refresh" CLEAR (ADVICE r01).
-            for name in os.listdir(self.path):
-                if name.startswith("g=") and _unescape_partition_value(name[2:]) == g:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
-        elif self._mem is not None:
-            # consolidate: materialize the remainder into ONE cached piece
-            # and release every previous cached batch — without this, a
-            # full-refresh pipeline replayed N times would pin N copies of
-            # the corpus in the cache (clear/drop are exactly the moments
-            # the reference's lifecycle discards data, so the one-pass
-            # re-materialization belongs here, not on every insert)
-            remainder = self._mem.where(F.col("g") != g).cache()
-            remainder.count()
-            for piece in self._mem_pieces:
-                piece.unpersist()
-            self._mem_pieces = [remainder]
-            self._mem = remainder
 
     def close(self) -> None:
         """Release every cached in-memory batch (no-op for parquet stores).

@@ -1,5 +1,7 @@
 """GraphStore.apply_delta: one rewrite job for every target graph, its
-crash windows, and what ``target_graphs`` means in both backends."""
+crash windows, and what ``target_graphs`` means in both backends; and the
+same crash windows for every other mutation that commits through the
+store's one rewrite path."""
 
 import os
 
@@ -102,39 +104,15 @@ def test_delete_of_every_quad_drops_the_partition(spark, tmp_path):
     assert store.quads().count() == len(BASE) - 2
 
 
-class Crash(RuntimeError):
-    pass
-
-
-def _inject(monkeypatch, where):
-    """Make the next apply_delta die at one step of its commit."""
-    commit, swap = GraphStore._commit_generation, GraphStore._complete_swap
-    calls = []
-
-    if where == "after_batch_write":
-        def boom(self, gname, src):
-            raise Crash(where)
-
-        monkeypatch.setattr(GraphStore, "_commit_generation", boom)
-    elif where == "after_first_swap":
-        # graph 1 swapped; graph 2 not yet committed
-        def boom(self, gname, src):
-            if calls:
-                raise Crash(where)
-            calls.append(gname)
-            commit(self, gname, src)
-
-        monkeypatch.setattr(GraphStore, "_commit_generation", boom)
-    elif where == "between_commit_and_swap":
-        # graph 1 swapped; graph 2's COMMIT marker written, swap not done
-        def boom(self, gname):
-            if calls:
-                raise Crash(where)
-            calls.append(gname)
-            swap(self, gname)
-
-        monkeypatch.setattr(GraphStore, "_complete_swap", boom)
-    return calls
+# each crash point of the apply_delta tests → (protocol step, call index)
+APPLY_CRASHES = {
+    # the batch is written, no graph committed
+    "after_batch_write": ("_commit_generation", 0),
+    # graph 1 swapped; graph 2 not yet committed
+    "after_first_swap": ("_commit_generation", 1),
+    # graph 1 swapped; graph 2's COMMIT marker written, swap not done
+    "between_commit_and_swap": ("_complete_swap", 1),
+}
 
 
 @pytest.mark.parametrize(
@@ -146,14 +124,12 @@ def _inject(monkeypatch, where):
     ],
 )
 def test_crash_recovers_each_graph_to_old_or_new(
-    spark, tmp_path, monkeypatch, where, new_graphs
+    spark, tmp_path, crash, where, new_graphs
 ):
     path = str(tmp_path / "q")
     store = _store(spark, path)
-    _inject(monkeypatch, where)
-    with pytest.raises(Crash):
+    with crash(*APPLY_CRASHES[where]):
         _apply(spark, store)
-    monkeypatch.undo()
     tmp_root = os.path.join(path, "_compact_tmp")
     assert any(n.startswith(_BATCH_PREFIX) for n in os.listdir(tmp_root))
 
@@ -172,9 +148,7 @@ def test_crash_recovers_each_graph_to_old_or_new(
     }
 
 
-def test_batch_name_never_collides_with_a_graph_tmp_name(
-    spark, tmp_path, monkeypatch
-):
+def test_batch_name_never_collides_with_a_graph_tmp_name(spark, tmp_path, crash):
     """A graph named like the batch directory still gets its own tmp
     name: '=' is always escaped in graph names, never in the batch's."""
     assert "=" in _BATCH_PREFIX
@@ -183,14 +157,12 @@ def test_batch_name_never_collides_with_a_graph_tmp_name(
     path = str(tmp_path / "q")
     store = GraphStore(spark, path)
     store.insert_data([quad(tricky, "urn:s:1", "v1")])
-    _inject(monkeypatch, "after_batch_write")
-    with pytest.raises(Crash):
+    with crash("_commit_generation"):
         store.apply_delta(
             spark.createDataFrame([], QUAD_SCHEMA),
             spark.createDataFrame([quad(tricky, "urn:s:2", "v2")], QUAD_SCHEMA),
             target_graphs=[tricky],
         )
-    monkeypatch.undo()
     (batch,) = os.listdir(os.path.join(path, "_compact_tmp"))
     assert batch.startswith(_BATCH_PREFIX) and batch != _escape_partition_value(tricky)
     store = GraphStore(spark, path)
@@ -200,3 +172,96 @@ def test_batch_name_never_collides_with_a_graph_tmp_name(
         target_graphs=[tricky],
     )
     assert {r["s"] for r in store.graph(tricky).collect()} == {"urn:s:1", "urn:s:2"}
+
+
+# --------------------------------------------------------------------------
+# every committing mutation: old or new generation after each crash point
+# --------------------------------------------------------------------------
+
+A1 = quad("urn:g:a", "urn:s:1", "v1")
+A2 = quad("urn:g:a", "urn:s:2", "v2")
+B1 = quad("urn:g:b", "urn:s:3", "v3")
+C1 = quad("urn:g:c", "urn:s:4", "v4")  # never a target
+BEFORE = {"urn:g:a": {A1, A2}, "urn:g:b": {B1}, "urn:g:c": {C1}}
+
+
+def _relabel(rows, g):
+    return {(g, *r[1:]) for r in rows}
+
+
+# operation → (call, graphs afterwards)
+MUTATIONS = {
+    "delete": (
+        lambda spark, st: st.delete(spark.createDataFrame([A1, B1], QUAD_SCHEMA)),
+        {**BEFORE, "urn:g:a": {A2}, "urn:g:b": set()},
+    ),
+    "clear": (lambda spark, st: st.clear("urn:g:a"), {**BEFORE, "urn:g:a": set()}),
+    "drop": (lambda spark, st: st.drop("urn:g:b"), {**BEFORE, "urn:g:b": set()}),
+    "copy_graph": (
+        lambda spark, st: st.copy_graph("urn:g:a", "urn:g:b"),
+        {**BEFORE, "urn:g:b": _relabel({A1, A2}, "urn:g:b")},
+    ),
+    "move_graph": (
+        lambda spark, st: st.move_graph("urn:g:a", "urn:g:b"),
+        {**BEFORE, "urn:g:a": set(), "urn:g:b": _relabel({A1, A2}, "urn:g:b")},
+    ),
+    "optimize": (lambda spark, st: st.optimize(target_files=2), BEFORE),
+}
+
+
+def _partitions(path):
+    """Each live partition directory with its file names."""
+    return {
+        name: sorted(os.listdir(os.path.join(path, name)))
+        for name in os.listdir(path)
+        if name.startswith("g=")
+    }
+
+
+@pytest.mark.parametrize(
+    "op, step, nth",
+    [
+        (op, step, 0)
+        for op in MUTATIONS
+        for step in ("_commit_generation", "_complete_swap")
+    ]
+    # move's second commit is src's: dst is already swapped
+    + [("move_graph", step, 1) for step in ("_commit_generation", "_complete_swap")],
+)
+def test_every_mutation_recovers_each_graph_to_old_or_new(
+    spark, tmp_path, crash, op, step, nth
+):
+    """Crash each committing mutation after its rows are written
+    (``_commit_generation``) or between a COMMIT and its swap
+    (``_complete_swap``); a reopened store holds every graph at its old
+    or its new generation, with ``_compact_tmp/`` empty."""
+    call, after = MUTATIONS[op]
+    path = str(tmp_path / "q")
+    store = GraphStore(spark, path)
+    store.insert(spark.createDataFrame([A1, A2, B1, C1], QUAD_SCHEMA))
+    live = _partitions(path)
+    with crash(step, nth):
+        call(spark, store)
+    tmp_root = os.path.join(path, "_compact_tmp")
+    if nth == 0:
+        # the first graph's COMMIT comes before any live partition changes
+        assert _partitions(path) == live
+        if step == "_complete_swap":
+            assert any(n.endswith(".COMMIT") for n in os.listdir(tmp_root))
+
+    reopened = GraphStore(spark, path)
+    got = _graphs(reopened)
+    for g in BEFORE:
+        assert got.get(g, set()) in (BEFORE[g], after[g]), g
+    assert not os.path.isdir(tmp_root) or os.listdir(tmp_root) == []
+    if op == "move_graph":
+        # no quad lost: each source quad is in src or (relabeled) in dst
+        for r in BEFORE["urn:g:a"]:
+            assert r in got.get("urn:g:a", set()) or (
+                _relabel({r}, "urn:g:b") <= got.get("urn:g:b", set())
+            )
+    # the recovered store takes the same mutation to its final state (a
+    # MOVE whose source is already dropped has nothing left to move)
+    if op != "move_graph" or "urn:g:a" in got:
+        call(spark, reopened)
+    assert _graphs(reopened) == {g: rows for g, rows in after.items() if rows}

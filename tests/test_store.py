@@ -3,6 +3,7 @@
 import pytest
 
 from knowledge_graph_etl_spark.store import GraphStore
+from knowledge_graph_etl_spark.terms import QUAD_COLUMNS, QUAD_SCHEMA
 
 ROWS = [
     ("urn:g:a", "urn:s:1", "iri", "urn:p:x", "v1", "literal", None, None),
@@ -46,6 +47,17 @@ def test_clear_and_drop(store):
     store.clear("urn:g:never")
     store.drop("urn:g:b")
     assert store.quads().count() == 0
+
+
+def test_delete_discards_rows_outside_target_graphs(store, spark):
+    store.insert_data(ROWS)
+    # ROWS[2] lives in urn:g:b, outside the targets: kept, in both modes
+    store.delete(
+        spark.createDataFrame([ROWS[0], ROWS[2]], QUAD_SCHEMA),
+        target_graphs=["urn:g:a"],
+    )
+    got = store.quads().select(*QUAD_COLUMNS).collect()
+    assert sorted(map(tuple, got)) == sorted(ROWS[1:])
 
 
 def test_optimize_preserves_data(spark, tmp_path):
@@ -135,18 +147,91 @@ def test_inmemory_clear_consolidates_cache(spark):
     assert s._mem_pieces == [] and s.quads().count() == 0
 
 
+def _df(spark, rows):
+    return spark.createDataFrame(rows, QUAD_SCHEMA)
+
+
+MEM_ROWS = [
+    ("urn:g:a", "s1", "iri", "p", "v1", "literal", None, None),
+    ("urn:g:b", "s2", "iri", "p", "v2", "literal", None, None),
+]
+# every in-memory rewrite → (call, quads afterwards as (g, s))
+MEM_REWRITES = {
+    "delete": (
+        lambda spark, s: s.delete(_df(spark, [MEM_ROWS[0]])),
+        {("urn:g:b", "s2")},
+    ),
+    "copy_graph": (
+        lambda spark, s: s.copy_graph("urn:g:a", "urn:g:b"),
+        {("urn:g:a", "s1"), ("urn:g:b", "s1")},
+    ),
+    "move_graph": (
+        lambda spark, s: s.move_graph("urn:g:a", "urn:g:b"),
+        {("urn:g:b", "s1")},
+    ),
+    "apply_delta": (
+        lambda spark, s: s.apply_delta(
+            _df(spark, [MEM_ROWS[1]]),
+            _df(spark, [("urn:g:b", "s3", "iri", "p", "v3", "literal", None, None)]),
+            target_graphs=["urn:g:b"],
+        ),
+        {("urn:g:a", "s1"), ("urn:g:b", "s3")},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", MEM_REWRITES)
+def test_inmemory_rewrites_leave_one_cached_piece(spark, op):
+    """Like CLEAR (test above), every other graph rewrite of an
+    in-memory store replaces the cached pieces with one cached piece and
+    releases the old ones."""
+    call, after = MEM_REWRITES[op]
+    s = GraphStore(spark)
+    s.insert_data(MEM_ROWS[:1])
+    s.insert_data(MEM_ROWS[1:])
+    old = list(s._mem_pieces)
+    assert len(old) == 2
+    call(spark, s)
+    (piece,) = s._mem_pieces
+    assert piece.is_cached and not any(p.is_cached for p in old)
+    assert {(r["g"], r["s"]) for r in s.quads().collect()} == after
+    s.close()
+
+
+def test_mem_and_parquet_stores_end_equal(spark, tmp_path):
+    """One mutation sequence leaves both backends with the same quads."""
+    a4 = ("urn:g:a", "urn:s:4", "iri", "urn:p:x", "v4", "literal", None, None)
+    c3 = ("urn:g:c", "urn:s:3", "iri", "urn:p:y", "v3", "literal", None, None)
+    d5 = ("urn:g:d", "urn:s:5", "iri", "urn:p:x", "v5", "literal", None, None)
+
+    def run(store):
+        store.insert_data(ROWS + [c3])
+        store.delete(_df(spark, ROWS[:1]))
+        # c3's delete is outside the targets: discarded
+        store.apply_delta(
+            _df(spark, [ROWS[1], c3]), _df(spark, [a4, d5]), ["urn:g:a", "urn:g:d"]
+        )
+        store.clear("urn:g:b")
+        store.copy_graph("urn:g:a", "urn:g:b")
+        store.move_graph("urn:g:d", "urn:g:a")
+        return sorted(map(tuple, store.quads().select(*QUAD_COLUMNS).collect()))
+
+    mem = run(GraphStore(spark))
+    assert mem == run(GraphStore(spark, str(tmp_path / "q")))
+    assert mem == sorted([("urn:g:a", *d5[1:]), ("urn:g:b", *a4[1:]), c3])
+
+
 # --------------------------------------------------------------------------
 # crash-safe optimize: every crash window recovers to a complete graph
 # --------------------------------------------------------------------------
 
 
-def _crashy_store(spark, tmp_path, crash_in):
+def _crashy_store(spark, tmp_path, crash_in, crash):
     """GraphStore whose compaction dies at a chosen protocol step."""
     path = str(tmp_path / "q")
     store = GraphStore(spark, path)
     store.insert_data(ROWS)
     before = {tuple(r) for r in store.quads().collect()}
-    orig = GraphStore._complete_swap
 
     if crash_in == "before_commit":
         # die while writing the compacted generation (no marker yet):
@@ -159,15 +244,8 @@ def _crashy_store(spark, tmp_path, crash_in):
             f.write("half-written garbage")
     elif crash_in == "after_commit":
         # die between the COMMIT marker and the swap
-        def boom(self, gname):
-            raise RuntimeError("injected crash after commit point")
-
-        GraphStore._complete_swap = boom
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                store.optimize()
-        finally:
-            GraphStore._complete_swap = orig
+        with crash("_complete_swap"):
+            store.optimize()
     elif crash_in == "after_swap":
         # die between the rename and marker removal: marker with no tmp dir
         import os
@@ -180,11 +258,11 @@ def _crashy_store(spark, tmp_path, crash_in):
 
 
 @pytest.mark.parametrize("crash_in", ["before_commit", "after_commit", "after_swap"])
-def test_optimize_crash_recovery(spark, tmp_path, crash_in):
+def test_optimize_crash_recovery(spark, tmp_path, crash_in, crash):
     """Kill the compaction at each protocol step; a fresh GraphStore over
     the same path must read the COMPLETE original graph (the r02 code left
     the graph empty if the process died between drop and re-append)."""
-    path, before = _crashy_store(spark, tmp_path, crash_in)
+    path, before = _crashy_store(spark, tmp_path, crash_in, crash)
     reopened = GraphStore(spark, path)
     assert {tuple(r) for r in reopened.quads().collect()} == before
     # and a subsequent optimize on the recovered store succeeds cleanly
@@ -192,9 +270,9 @@ def test_optimize_crash_recovery(spark, tmp_path, crash_in):
     assert {tuple(r) for r in reopened.quads().collect()} == before
 
 
-def test_optimize_recovery_is_idempotent(spark, tmp_path):
+def test_optimize_recovery_is_idempotent(spark, tmp_path, crash):
     """Recovery replayed twice (crash during recovery itself) is safe."""
-    path, before = _crashy_store(spark, tmp_path, "after_commit")
+    path, before = _crashy_store(spark, tmp_path, "after_commit", crash)
     GraphStore(spark, path)
     reopened = GraphStore(spark, path)
     assert {tuple(r) for r in reopened.quads().collect()} == before
