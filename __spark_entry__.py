@@ -6822,6 +6822,10 @@ def ensure_volume_base(spark, sf_dir: str) -> str:
         # it — rebuild once so the snapshot is genuinely pristine
         shutil.rmtree(path, ignore_errors=True)
     if not os.path.exists(marker):
+        # the same error the other kg entries raise, which bench.py's
+        # setup step expects (any other error aborts the whole run)
+        if not os.path.isdir(sparql_dir):
+            raise RuntimeError(f"reference sparql dir not available: {sparql_dir}")
         shutil.rmtree(path, ignore_errors=True)
         shutil.rmtree(pristine, ignore_errors=True)
         eng = Engine(spark, store_path=path)

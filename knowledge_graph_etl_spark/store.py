@@ -482,14 +482,16 @@ class GraphStore:
         of scanning the graph. (At 100 TB this is what makes a 7-way BGP
         self-join read a sliver of the store per pattern.)
 
-        Each graph is written on its own (without ``g``: the partition
+        Each stored graph (only ``g``, when given; an absent ``g`` is a
+        no-op) is written on its own (without ``g``: the partition
         directory name carries it) and committed through
         :meth:`_commit_generation`."""
         if not self.path:
             return
         self._recover_compactions()
-        graphs = [g] if g else self.list_graphs()
-        for gname in graphs:
+        for gname in self.list_graphs():
+            if g and gname != g:
+                continue
             df = self.graph(gname)
             if cluster_by:
                 df = df.repartitionByRange(target_files, F.col(cluster_by))

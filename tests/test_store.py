@@ -1,5 +1,7 @@
 """GraphStore: set semantics, CLEAR/DROP, partition layout (SURVEY.md §1.3, §2 ops 11-13)."""
 
+import os
+
 import pytest
 
 from knowledge_graph_etl_spark.store import GraphStore
@@ -66,6 +68,18 @@ def test_optimize_preserves_data(spark, tmp_path):
     before = {tuple(r) for r in store.quads().collect()}
     store.optimize()
     assert {tuple(r) for r in store.quads().collect()} == before
+
+
+def test_optimize_of_an_absent_graph_is_a_no_op(spark, tmp_path):
+    store = GraphStore(spark, str(tmp_path / "q"))
+    store.insert_data(ROWS[:2])
+    store.optimize("urn:g:absent")
+    assert store.list_graphs() == ["urn:g:a"]
+    assert not [n for n in os.listdir(tmp_path / "q") if "absent" in n]
+    store.optimize("urn:g:a")
+    assert store.graph("urn:g:a").count() == 2
+    store.clear("urn:g:a")
+    assert store.list_graphs() == []
 
 
 def test_list_graphs(store):

@@ -6,7 +6,11 @@ degraded store (measured 38 s seeded -> 104 s by the ~20th apply on
 identical code). Filesystem-only: exercises the restore branch with a
 stub session, no Spark needed."""
 
+import os
 import shutil
+
+import pytest
+from test_pipeline import REF_SPARQL_DIR
 
 
 class _Conf:
@@ -64,3 +68,14 @@ def test_inventory_fingerprint_sees_count_and_bytes(tmp_path):
     assert base == (1, 2)
     (d / "b").write_bytes(b"y")
     assert entry._store_inventory(str(d)) == (2, 3)
+
+
+def test_unseeded_store_without_mapping_files_raises_runtime_error(tmp_path):
+    # bench.py's setup step skips exactly RuntimeError; any other error
+    # would abort the whole bench run on a host without the mapping files
+    import __spark_entry__ as entry
+
+    if os.path.isdir(REF_SPARQL_DIR):
+        pytest.skip("mapping files present: the call would build the store")
+    with pytest.raises(RuntimeError, match="reference sparql dir"):
+        entry.ensure_volume_base(_StubSpark(str(tmp_path)), "unused")

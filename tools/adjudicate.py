@@ -2,9 +2,10 @@
 
 The agg_cube protocol, automated: for each named entry (or every entry in
 BENCH_local.json's ``over_bar`` list with ``--from-bench``), run the n=5
-solo series — ONE fresh local[32] session per entry via tools/seq_bench.py,
-the entry executed 5 times back-to-back, median taken (the first cold run
-is always an outlier; the median absorbs it) — then compare the median
+solo series — ONE fresh session per entry via ``bench.py NAME,NAME,...``
+(the bench's own session on local[$SPARK_GRAFT_CPUS], warm-ups and
+setups), the entry executed 5 times back-to-back, median taken (the first
+cold run is always an outlier; the median absorbs it) — then compare the median
 against the entry's bar in tools/bench_bars.json and print the BASELINE.md
 markdown table.
 
@@ -41,21 +42,22 @@ REPO = os.path.dirname(HERE)
 
 
 def solo_series(entry: str, n: int, sf_dir: str) -> list[float]:
-    """One fresh session, ``entry`` run n times (seq_bench records every
-    repeat since r10)."""
+    """One fresh session, ``entry`` run n times: ``bench.py`` named mode,
+    which prints ``{entry: [seconds, ...]}``."""
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_SF_DIR=sf_dir)
     proc = subprocess.run(
-        [sys.executable, os.path.join(HERE, "seq_bench.py"), ",".join([entry] * n)],
+        [sys.executable, os.path.join(REPO, "bench.py"), ",".join([entry] * n)],
         cwd=REPO,
         env=env,
         capture_output=True,
         text=True,
     )
     if proc.returncode != 0:
-        raise RuntimeError(f"seq_bench failed for {entry}:\n{proc.stderr[-2000:]}")
-    payload = json.loads(proc.stdout.strip().splitlines()[-1])
-    rec = payload[entry]
-    return rec["runs"] if isinstance(rec, dict) else [rec]
+        raise RuntimeError(f"bench.py failed for {entry}:\n{proc.stderr[-2000:]}")
+    runs = json.loads(proc.stdout.strip().splitlines()[-1])[entry]
+    if min(runs) < 0:  # bench.py records a raising run as -1.0
+        raise RuntimeError(f"{entry} raised in bench.py:\n{proc.stderr[-2000:]}")
+    return runs
 
 
 def main() -> int:

@@ -1,6 +1,8 @@
 """Consistency check: every queries()/bench_only_queries() entry must be
-referenced in OPERATORS.md, and every oracle_sql() key must exist in
-queries() (and vice versa). Run in CI-style before closing a round:
+referenced in OPERATORS.md, every oracle_sql() key must exist in
+queries() (and vice versa), and every entry named in bench.py's
+_SETUP_DEPENDENTS must be registered (a renamed entry would otherwise
+lose its untimed setup). Run in CI-style before closing a round:
 
     python tools/check_matrix.py
 """
@@ -15,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     import __spark_entry__ as m
+    from bench import _SETUP_DEPENDENTS
 
     text = open(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md"),
@@ -33,6 +36,12 @@ def main() -> int:
     for name in o:
         if name not in q:
             problems.append(f"oracle_sql() key {name} not in queries()")
+    for setup, dependents in _SETUP_DEPENDENTS.items():
+        if not hasattr(m, setup):
+            problems.append(f"bench.py setup {setup} is not in __spark_entry__")
+        for name in dependents:
+            if name not in q and name not in b:
+                problems.append(f"bench.py {setup} dependent {name} is not a registered entry")
     overlap = set(q) & set(b)
     if overlap:
         problems.append(f"entries in BOTH queries() and bench_only_queries(): {sorted(overlap)}")

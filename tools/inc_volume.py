@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10000
 RUN_FULL = "--no-full" not in sys.argv
@@ -35,19 +35,11 @@ if "--jobs" in sys.argv:
     JOBS = int(sys.argv[_ji])
 TINY = "--tiny" in sys.argv
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+import bench
+
+spark = bench.session()
 
 import tempfile
 
