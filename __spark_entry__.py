@@ -20,11 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowledge_graph_etl_spark import BGP, GraphStore, Term, Var, construct, pattern
+from knowledge_graph_etl_spark.ckpt import pin
 from knowledge_graph_etl_spark.extensions.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    resolve_clusters,
 )
 from knowledge_graph_etl_spark.extensions.multimodal import (
     attach_metadata,
@@ -1353,26 +1353,17 @@ def dedup_resolve_clusters_q(spark, sf_dir):
     oracle recomputes the same components via a recursive CTE, so the
     ENTIRE fuzzy-dedup pipeline — signature → banding → candidate join →
     estimate filter → transitive cluster resolution — is hash-verified.
+    It is ``corpus_dedup`` without the keep flag; corpus_dedup releases
+    the pairs' signature checkpoint once the components have read them."""
+    from knowledge_graph_etl_spark.extensions.dedup import corpus_dedup
 
-    Scoped checkpoint release: resolve_clusters frees its own superseded
-    per-round checkpoints; the scope wrapper additionally frees the
-    upstream minhash signature checkpoint (severed from the result by the
-    component solver's eager edge checkpoint), so the query leaves only
-    the final labels table persisted."""
-    from knowledge_graph_etl_spark.extensions.ckpt import (
-        persistent_rdd_ids,
-        release_new_checkpoints,
-    )
-
-    before = persistent_rdd_ids(spark)
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, num_hashes=32, bands=4, threshold=0.8, hash_fn="md5"
-    )
-    # minhash_lsh_pairs output is deduped with id_a < id_b — canonical
-    out = resolve_clusters(pairs, docs=docs, pairs_canonical=True)
-    release_new_checkpoints(spark, before, keep=out)
-    return out
+    return corpus_dedup(
+        _t(spark, sf_dir, "documents"),
+        num_hashes=32,
+        bands=4,
+        threshold=0.8,
+        hash_fn="md5",
+    ).drop("is_kept")
 
 
 def ann_pq_topk_q(spark, sf_dir):
@@ -2334,29 +2325,32 @@ def kg_path_query_q(spark, sf_dir):
     )
 
 
+def _pfx(tag: str, col: str):
+    return F.concat(F.lit(tag), F.col(col).cast("string"))
+
+
+def _chain_edges(spark, sf_dir):
+    """The order→customer→nation→region chain graph's edge plan."""
+    o = _t(spark, sf_dir, "orders").select(
+        _pfx("o", "o_orderkey").alias("src"), _pfx("c", "o_custkey").alias("dst")
+    )
+    c = _t(spark, sf_dir, "customer").select(
+        _pfx("c", "c_custkey").alias("src"), _pfx("n", "c_nationkey").alias("dst")
+    )
+    n = _t(spark, sf_dir, "nation").select(
+        _pfx("n", "n_nationkey").alias("src"), _pfx("r", "n_regionkey").alias("dst")
+    )
+    return o.unionByName(c).unionByName(n)
+
+
 def graph_pagerank_q(spark, sf_dir):
     """Fixed-point integer PageRank over the order→customer→nation→region
     chain graph (extensions/graph.pagerank) — an iterative algorithm with
     an EXACT SQL oracle (integer micro-unit arithmetic, 5 unrolled
-    iterations)."""
+    iterations). pagerank pins the edge plan it reads 4x itself."""
     from knowledge_graph_etl_spark.extensions.graph import pagerank
 
-    def pfx(tag, col):
-        return F.concat(F.lit(tag), F.col(col).cast("string"))
-
-    o = _t(spark, sf_dir, "orders").select(
-        pfx("o", "o_orderkey").alias("src"), pfx("c", "o_custkey").alias("dst")
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        pfx("c", "c_custkey").alias("src"), pfx("n", "c_nationkey").alias("dst")
-    )
-    n = _t(spark, sf_dir, "nation").select(
-        pfx("n", "n_nationkey").alias("src"), pfx("r", "n_regionkey").alias("dst")
-    )
-    # pagerank consumes the edge plan 4x (node spine x2, out-degrees,
-    # degree-annotated edges) — one checkpoint, one execution (r14)
-    e = o.unionByName(c).unionByName(n).localCheckpoint(eager=True)
-    return pagerank(e, iters=5)
+    return pagerank(_chain_edges(spark, sf_dir), iters=5)
 
 
 def graph_ppr_q(spark, sf_dir):
@@ -2366,24 +2360,8 @@ def graph_ppr_q(spark, sf_dir):
     unrolled integer oracle, seeded."""
     from knowledge_graph_etl_spark.extensions.graph import pagerank
 
-    def pfx(tag, col):
-        return F.concat(F.lit(tag), F.col(col).cast("string"))
-
-    o = _t(spark, sf_dir, "orders").select(
-        pfx("o", "o_orderkey").alias("src"), pfx("c", "o_custkey").alias("dst")
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        pfx("c", "c_custkey").alias("src"), pfx("n", "c_nationkey").alias("dst")
-    )
-    n = _t(spark, sf_dir, "nation").select(
-        pfx("n", "n_nationkey").alias("src"), pfx("r", "n_regionkey").alias("dst")
-    )
-    seeds = _t(spark, sf_dir, "nation").select(
-        pfx("n", "n_nationkey").alias("node")
-    )
-    # same 4-consumer edge-plan reuse as graph_pagerank (r14)
-    e = o.unionByName(c).unionByName(n).localCheckpoint(eager=True)
-    return pagerank(e, iters=5, restart=seeds)
+    seeds = _t(spark, sf_dir, "nation").select(_pfx("n", "n_nationkey").alias("node"))
+    return pagerank(_chain_edges(spark, sf_dir), iters=5, restart=seeds)
 
 
 def _pagerank_oracle(iters: int = 5, seed_like: str | None = None) -> str:
@@ -2462,13 +2440,9 @@ def graph_communities_q(spark, sf_dir):
         .select(
             F.col("x.l_suppkey").alias("src"), F.col("y.l_suppkey").alias("dst")
         )
-        # the co-supply self-join (1.5s warm, 8.7M edges at sf0.1) feeds
-        # FOUR consumers inside label_propagation (both symmetrize-union
-        # branches of the edge checkpoint + both node-spine branches);
-        # checkpointed once here it executes once (r14, guide §2.4 —
-        # corpus-sized edge list, the safe checkpoint class)
-        .localCheckpoint(eager=True)
     )
+    # the co-supply self-join (1.5s warm, 8.7M edges at sf0.1) feeds four
+    # consumers inside label_propagation, which pins it once itself
     return label_propagation(e, iters=4)
 
 
@@ -2763,18 +2737,17 @@ def curation_pipeline_q(spark, sf_dir):
     # groups, lowest id wins) — the agg+join-back form of exact_dedup()
     # would pay two
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    # localCheckpoint (r13): decontaminate consumes its corpus three ways
+    # checkpoint (r13): decontaminate consumes its corpus three ways
     # (gram explode, benchmark subset, id spine) — un-severed, the whole
     # normalize→repetition→window-dedup subtree re-executed per consumer
     # (measured 7.3 → 5.2 s solo with the checkpoint; the r05-shaped
     # pipeline is the one place decontaminate sees a DERIVED corpus).
     # The returned plan references the checkpoint; the harness releases
     # it after consuming the result (ckpt module's accepted budget).
-    kept = (
+    kept = pin(
         filt.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
-        .localCheckpoint(eager=True)
     )
     # decontaminate returns a row per input doc — filter it directly, no
     # join-back needed for an id-only manifest
@@ -2847,22 +2820,15 @@ def doc_minhash_cluster_dedup_q(spark, sf_dir):
     the single-call API a training pipeline uses. Same md5 hash family /
     banding / threshold as dedup_resolve_clusters, so the oracle is that
     query's recursive-CTE components wrapped with the keep decision."""
-    from knowledge_graph_etl_spark.extensions.ckpt import (
-        persistent_rdd_ids,
-        release_new_checkpoints,
-    )
     from knowledge_graph_etl_spark.extensions.dedup import corpus_dedup
 
-    before = persistent_rdd_ids(spark)
-    out = corpus_dedup(
+    return corpus_dedup(
         _t(spark, sf_dir, "documents"),
         num_hashes=32,
         bands=4,
         threshold=0.8,
         hash_fn="md5",
     )
-    release_new_checkpoints(spark, before, keep=out)
-    return out
 
 
 def contamination_report_q(spark, sf_dir):
@@ -3535,10 +3501,6 @@ def curation_pipeline_v2_q(spark, sf_dir):
     survivors. Every stage is an already-oracled operator; this query
     pins that they COMPOSE (the budget's cumulative order runs over the
     filtered corpus, not the raw one)."""
-    from knowledge_graph_etl_spark.extensions.ckpt import (
-        persistent_rdd_ids,
-        release_new_checkpoints,
-    )
     from knowledge_graph_etl_spark.extensions.curation import (
         blocklist_filter,
         select_token_budget,
@@ -3546,7 +3508,6 @@ def curation_pipeline_v2_q(spark, sf_dir):
     from knowledge_graph_etl_spark.extensions.dedup import corpus_dedup
     from knowledge_graph_etl_spark.extensions.text import tokens
 
-    before = persistent_rdd_ids(spark)
     d = _t(spark, sf_dir, "documents")
     terms = (
         d.where(F.col("doc_id") == 0)
@@ -3566,9 +3527,7 @@ def curation_pipeline_v2_q(spark, sf_dir):
     survivors = d.join(clean, "doc_id", "left_semi").join(
         keeps, "doc_id", "left_semi"
     )
-    out = select_token_budget(survivors, 15_000)
-    release_new_checkpoints(spark, before, keep=out)
-    return out
+    return select_token_budget(survivors, 15_000)
 
 
 def search_bm25_topk_q(spark, sf_dir):
@@ -4153,7 +4112,7 @@ def graph_linkpred_q(spark, sf_dir):
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     )
     return (
-        linkpred_scores(e, min_common=2, materialize=True)
+        linkpred_scores(e, min_common=2)
         .orderBy(F.desc("ra_ppm"), "src_a", "src_b")
         .limit(200)
         .select(
@@ -4799,7 +4758,7 @@ def graph_ktruss_q(spark, sf_dir):
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     )
     top = (
-        linkpred_scores(e, min_common=2, materialize=True)
+        linkpred_scores(e, min_common=2)
         .orderBy(F.desc("ra_ppm"), "src_a", "src_b")
         .limit(2000)
         .select(F.col("src_a").alias("src"), F.col("src_b").alias("dst"))
@@ -4973,11 +4932,9 @@ def graph_wcc_q(spark, sf_dir):
             F.col("y.l_suppkey").alias("dst"),
         )
         .distinct()
-        # the domestic co-purchase join feeds every consumer inside
-        # connected_components — checkpoint once, execute once (r14)
-        .localCheckpoint(eager=True)
     )
-    # e is distinct with x.supp < y.supp — canonical pairs
+    # e is distinct with x.supp < y.supp — canonical pairs; the
+    # components' edge checkpoint is its only read
     return connected_components(e, pairs_canonical=True)
 
 
@@ -6711,9 +6668,8 @@ def kg_pipeline_full_q(spark, sf_dir):
         optimize=True,
         jobs=8,
     )
-    out = eng.store.graph(
-        "https://data.hetarchief.be/graph/organizations"
-    ).localCheckpoint(eager=True)  # detach from the store files...
+    # detach from the store files...
+    out = pin(eng.store.graph("https://data.hetarchief.be/graph/organizations"))
     shutil.rmtree(store_path, ignore_errors=True)  # ...so cleanup is safe
     return out
 
@@ -6758,9 +6714,7 @@ def kg_pipeline_volume_q(spark, sf_dir):
         optimize=True,
         jobs=8,
     )
-    out = eng.store.graph(
-        "https://data.hetarchief.be/graph/organizations"
-    ).localCheckpoint(eager=True)
+    out = pin(eng.store.graph("https://data.hetarchief.be/graph/organizations"))
     shutil.rmtree(store_path, ignore_errors=True)
     return out
 
@@ -6861,8 +6815,7 @@ def _mutated_volume_docs(spark):
     # the scratch loads — without this each consumer re-runs the
     # mapInPandas generation
     docs = {
-        k: v.localCheckpoint(eager=True)
-        for k, v in volume_documents(spark, n_companies=10000).items()
+        k: pin(v) for k, v in volume_documents(spark, n_companies=10000).items()
     }
     out = dict(docs)
     idx = F.split("doc_id", "-").getItem(1).cast("int")
@@ -6917,9 +6870,7 @@ def kg_pipeline_incremental_q(spark, sf_dir):
     run_pipeline_incremental(
         eng, old, new, sparql_dir, run_id="bench-incremental", jobs=8
     )
-    return eng.store.graph(GRAPH_NS + "organizations").localCheckpoint(
-        eager=True
-    )
+    return pin(eng.store.graph(GRAPH_NS + "organizations"))
 
 
 def kg_volume_read_q(spark, sf_dir):

@@ -45,42 +45,18 @@ GRAPH_NS = "https://data.hetarchief.be/graph/"
 class Engine:
     """A quad store plus the SPARQL-Update execution path."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        store_path: str | None = None,
-        stats: bool = False,
-    ):
+    def __init__(self, spark: SparkSession, store_path: str | None = None):
         from .federation import ServiceRegistry
 
         self.spark = spark
         self.store = GraphStore(spark, store_path)
         #: engine-scoped SERVICE registry (see register_service)
         self._services = ServiceRegistry()
-        #: cost-based BGP join ordering from per-predicate row counts
-        #: (store.predicate_stats — the quad-store 'table sizes'). Opt-in
-        #: BY MEASUREMENT (BASELINE.md r11): on the volume pipeline the
-        #: refresh count-aggregates cost ~13% more than cardinality-
-        #: ordered BGPs save, because the mapping WHEREs are small and
-        #: already near-optimally ordered — the CBO pays off on
-        #: read-heavy stores with adversarial pattern order, not on this
-        #: update workload.
-        self.stats = stats
 
     def _compile_ctx(self):
-        from contextlib import ExitStack
-
         from .federation import active_registry
-        from .plans.compiler import predicate_stats_context
 
-        stack = ExitStack()
-        stack.enter_context(
-            predicate_stats_context(
-                self.store.predicate_stats() if self.stats else None
-            )
-        )
-        stack.enter_context(active_registry(self._services))
-        return stack
+        return active_registry(self._services)
 
     # -- federation -------------------------------------------------------
 
@@ -106,31 +82,14 @@ class Engine:
                 return f.read()
         return query
 
-    def update(self, query: str, params: dict | None = None) -> None:
-        """Execute one SPARQL Update (inline text or path to a .sparql file).
-
-        ``params`` performs ``{{params.key}}``-style constant substitution
-        before parsing, mirroring the reference's Jinja templating being a
-        query-construction-time step, not a row expression
-        (SURVEY.md §2 op 37; load_knowledge_graph.py:54-57,513-544).
-        """
+    def update(self, query: str) -> None:
+        """Execute one SPARQL Update (inline text or path to a .sparql file)."""
         with self._compile_ctx():
-            execute_update(
-                parse_update(self._substitute(query, params)), self.store
-            )
+            execute_update(parse_update(self._resolve(query)), self.store)
 
     # -- read path --------------------------------------------------------
 
-    def _substitute(self, query: str, params: dict | None) -> str:
-        text = self._resolve(query)
-        if params:
-            for k, v in params.items():
-                text = text.replace("{{params.%s}}" % k, str(v))
-        return text
-
-    def select(
-        self, query: str, params: dict | None = None, with_terms: bool = False
-    ) -> DataFrame:
+    def select(self, query: str, with_terms: bool = False) -> DataFrame:
         """Execute a SPARQL SELECT over the quad store → DataFrame with one
         column per projected variable (``with_terms=True`` adds the
         ``__type/__dt/__lang`` term companions).
@@ -140,37 +99,37 @@ class Engine:
         thing a user pointing an analytics engine at a quad store runs;
         compiles through the same algebra as the updates
         (projection/DISTINCT/ORDER/LIMIT/OFFSET added in plans.compiler)."""
-        node = parse_query(self._substitute(query, params))
+        node = parse_query(self._resolve(query))
         if not isinstance(node, SelectQuery):
             raise ValueError("select() needs a SELECT query; use ask()/update()")
         with self._compile_ctx():
             return compile_select(node, self.store, with_terms=with_terms)
 
-    def select_json(self, query: str, params: dict | None = None) -> dict:
+    def select_json(self, query: str) -> dict:
         """SPARQL SELECT → the W3C SPARQL 1.1 Query Results JSON envelope
         (``{"head": {"vars": [...]}, "results": {"bindings": [...]}}``) —
         the protocol-level interop format; see :mod:`.results` for the
         distributed per-solution form."""
         from .results import sparql_results_json
 
-        return sparql_results_json(self.select(query, params, with_terms=True))
+        return sparql_results_json(self.select(query, with_terms=True))
 
-    def ask(self, query: str, params: dict | None = None) -> bool:
+    def ask(self, query: str) -> bool:
         """SPARQL ASK → bool (the compiled plan is LIMIT 1 — Catalyst
         short-circuits the scan)."""
-        node = parse_query(self._substitute(query, params))
+        node = parse_query(self._resolve(query))
         if not isinstance(node, AskQuery):
             raise ValueError("ask() needs an ASK query; use select()/update()")
         with self._compile_ctx():
             return len(compile_ask(node, self.store).take(1)) > 0
 
-    def construct_query(self, query: str, params: dict | None = None) -> DataFrame:
+    def construct_query(self, query: str) -> DataFrame:
         """SPARQL CONSTRUCT → quads DataFrame (read-side; the triples are
         returned, not inserted — ``g`` NULL for default-graph template
         triples, the GRAPH IRI for GRAPH template blocks). Completes the
         read surface next to select()/ask(); same template machinery as
         INSERT..WHERE including unbound-skip and fresh template bnodes."""
-        node = parse_query(self._substitute(query, params))
+        node = parse_query(self._resolve(query))
         if not isinstance(node, ConstructQuery):
             raise ValueError(
                 "construct_query() needs a CONSTRUCT query; use select()/ask()/update()"
@@ -178,21 +137,21 @@ class Engine:
         with self._compile_ctx():
             return compile_construct(node, self.store)
 
-    def describe(self, query: str, params: dict | None = None) -> DataFrame:
+    def describe(self, query: str) -> DataFrame:
         """SPARQL DESCRIBE → quads DataFrame (outgoing arcs of the
         described resources; constant IRIs and/or WHERE-bound variables)."""
-        node = parse_query(self._substitute(query, params))
+        node = parse_query(self._resolve(query))
         if not isinstance(node, DescribeQuery):
             raise ValueError("describe() needs a DESCRIBE query")
         with self._compile_ctx():
             return compile_describe(node, self.store)
 
-    def explain(self, query: str, params: dict | None = None) -> str:
+    def explain(self, query: str) -> str:
         """Formatted physical plan of a read query (SELECT/ASK/CONSTRUCT/
         DESCRIBE) without executing it — the EXPLAIN surface: shows the
-        partition pruning, pushed filters, join strategies, and (with
-        ``stats=True``) the statistics-seeded join order the engine chose."""
-        node = parse_query(self._substitute(query, params))
+        partition pruning, pushed filters, join strategies and the join
+        order the engine chose."""
+        node = parse_query(self._resolve(query))
         with self._compile_ctx():
             if isinstance(node, SelectQuery):
                 df = compile_select(node, self.store)

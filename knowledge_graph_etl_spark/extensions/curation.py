@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import pin
 from .hashing import md5_u60
 from .text import punct_ratio, stopword_ratio, token_count, tokens, zip_kgrams
 
@@ -310,15 +311,15 @@ def training_order(
     key = F.md5(
         F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))
     )
-    ranged = (
-        docs.select(F.col(id_col), key.alias("__k"))
-        .repartitionByRange(partitions, "__k", id_col)
-        # Pin the partitioning: the counts collect below and the final
-        # ranked select are two executions, and the range partitioner
-        # samples boundaries per-execution — without this checkpoint the
-        # pid→offset map from pass 1 could be applied to a differently-cut
-        # pass 2 and ranks would stop being a permutation.
-        .localCheckpoint(eager=True)
+    # Pin the partitioning: the counts collect below and the final
+    # ranked select are two executions, and the range partitioner
+    # samples boundaries per-execution — without this checkpoint the
+    # pid→offset map from pass 1 could be applied to a differently-cut
+    # pass 2 and ranks would stop being a permutation.
+    ranged = pin(
+        docs.select(F.col(id_col), key.alias("__k")).repartitionByRange(
+            partitions, "__k", id_col
+        )
     )
     part = ranged.withColumn("__pid", F.spark_partition_id())
     counts = sorted(
@@ -1407,9 +1408,8 @@ def select_token_budget(
         key.alias("__k"),
         F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
     )
-    ranged = base.repartitionByRange(
-        partitions, "__k", id_col
-    ).localCheckpoint(eager=True)  # pin the cut (see training_order)
+    # pin the cut (see training_order)
+    ranged = pin(base.repartitionByRange(partitions, "__k", id_col))
     part = ranged.withColumn("__pid", F.spark_partition_id())
     sums = sorted(
         (r["__pid"], r["s"])
@@ -1465,9 +1465,9 @@ def curriculum_order(
         raise ValueError(f"n_stages must be >= 1, got {n_stages}")
 
     def two_pass_rank(df: DataFrame, order_cols: list[str], out: str) -> DataFrame:
-        ranged = df.repartitionByRange(
-            partitions, *[F.col(c) for c in order_cols]
-        ).localCheckpoint(eager=True)
+        ranged = pin(
+            df.repartitionByRange(partitions, *[F.col(c) for c in order_cols])
+        )
         part = ranged.withColumn("__pid", F.spark_partition_id())
         counts = sorted(
             (r["__pid"], r["c"])

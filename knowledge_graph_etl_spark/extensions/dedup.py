@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ckpt import CheckpointTracker
+from ..ckpt import Checkpoints, pin
 from .text import tokens
 
 
@@ -176,7 +176,6 @@ def _signature_table(
     id_col: str,
     num_hashes: int,
     hash_fn: str,
-    materialize: bool,
 ) -> DataFrame:
     """``(id, sig)`` MinHash signature table via explode → ONE
     min-aggregate: the document is tokenized once (vs num_hashes times if
@@ -184,9 +183,10 @@ def _signature_table(
     does not eliminate the common tokenize+distinct subtree across array
     elements, a measured ~30× slowdown), and the mins combine map-side
     before the shuffle on id. Token-less docs never reach the aggregate
-    (explode of an empty array). Materialization (localCheckpoint) is for
-    multi-consumer plans — a signature is ``num_hashes × 8`` bytes per
-    doc regardless of document size (sf-independent width)."""
+    (explode of an empty array). The table is checkpointed: every caller
+    reads it at least twice (banding + refinement, or both index writes),
+    and a signature is ``num_hashes × 8`` bytes per doc regardless of
+    document size (sf-independent width)."""
     tok = docs.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
@@ -206,9 +206,7 @@ def _signature_table(
     sig = agg.select(
         "id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig")
     )
-    if materialize and not docs.isStreaming:
-        sig = sig.localCheckpoint(eager=True)
-    return sig
+    return pin(sig)
 
 
 def _band_table(
@@ -269,7 +267,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, with an exact
     estimated-similarity refinement.
@@ -305,11 +302,9 @@ def minhash_lsh_pairs(
             f"bands ({bands}) must divide num_hashes ({num_hashes})"
         )
     # sig feeds THREE consumers (banding + both sides of the refinement
-    # join); without materialization the tokenize→hash→32-way-min subtree —
-    # the most expensive stage — re-executes each time. ``materialize=False``
-    # keeps plan construction fully lazy (no job at build time) for callers
-    # that only want the plan — same contract as ``construct(materialize=)``.
-    sig = _signature_table(docs, text_col, id_col, num_hashes, hash_fn, materialize)
+    # join); without its checkpoint the tokenize→hash→32-way-min subtree —
+    # the most expensive stage — re-executes each time
+    sig = _signature_table(docs, text_col, id_col, num_hashes, hash_fn)
     banded = _band_table(sig, num_hashes, bands, hash_fn)
     # Candidate generation joins NARROW rows (id, band, bucket) only;
     # signatures are joined back after dedup, when the pair set is small.
@@ -351,7 +346,6 @@ def incremental_dedup(
     bands: int = 8,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Admission control for a growing corpus: flag each document of a
     NEW ``batch`` that near-duplicates the EXISTING ``corpus`` (MinHash
@@ -380,8 +374,8 @@ def incremental_dedup(
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes})"
         )
-    csig = _signature_table(corpus, text_col, id_col, num_hashes, hash_fn, materialize)
-    bsig = _signature_table(batch, text_col, id_col, num_hashes, hash_fn, materialize)
+    csig = _signature_table(corpus, text_col, id_col, num_hashes, hash_fn)
+    bsig = _signature_table(batch, text_col, id_col, num_hashes, hash_fn)
     cband = _band_table(csig, num_hashes, bands, hash_fn)
     bband = _band_table(bsig, num_hashes, bands, hash_fn)
     return _probe_admission(
@@ -511,17 +505,19 @@ def build_dedup_index(
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
     from .layout import write_bucketed
 
-    # materialize: sig feeds BOTH writes — without it the tokenize→min
+    # sig (checkpointed) feeds BOTH writes — without it the tokenize→min
     # subtree (the expensive stage) runs twice, once per saveAsTable
-    sig = _signature_table(corpus, text_col, id_col, num_hashes, hash_fn, True)
+    ck = Checkpoints()
+    sig = ck.own(_signature_table(corpus, text_col, id_col, num_hashes, hash_fn))
     if num_buckets is None:
-        # sig is localCheckpointed here, so the count is a cheap
+        # sig is checkpointed, so the count is a cheap
         # metadata-ish pass over materialized partitions, not a rescan
         num_buckets = _auto_num_buckets(sig.count())
     band = _band_table(sig, num_hashes, bands, hash_fn)
     bands_table, sigs_table = f"{table_prefix}_bands", f"{table_prefix}_sigs"
     write_bucketed(band, bands_table, ["band", "bucket"], num_buckets, mode=mode)
     write_bucketed(sig.select("id", "sig"), sigs_table, ["id"], num_buckets, mode=mode)
+    ck.release()
     return bands_table, sigs_table
 
 
@@ -565,7 +561,8 @@ def append_to_dedup_index(
         num_buckets = _table_num_buckets(
             admitted.sparkSession, f"{table_prefix}_bands"
         )
-    sig = _signature_table(admitted, text_col, id_col, num_hashes, hash_fn, True)
+    ck = Checkpoints()
+    sig = ck.own(_signature_table(admitted, text_col, id_col, num_hashes, hash_fn))
     band = _band_table(sig, num_hashes, bands, hash_fn)
     band.write.mode("append").format("parquet").bucketBy(
         int(num_buckets), "band", "bucket"
@@ -573,6 +570,7 @@ def append_to_dedup_index(
     sig.select("id", "sig").write.mode("append").format("parquet").bucketBy(
         int(num_buckets), "id"
     ).saveAsTable(f"{table_prefix}_sigs")
+    ck.release()
 
 
 def incremental_dedup_steady(
@@ -584,7 +582,6 @@ def incremental_dedup_steady(
     bands: int = 8,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Steady-state batch admission against a PREBUILT corpus index
     (:func:`build_dedup_index`): hash only the batch, probe the bucketed
@@ -598,7 +595,7 @@ def incremental_dedup_steady(
     spark = batch.sparkSession
     cband = spark.table(f"{table_prefix}_bands")
     csig = spark.table(f"{table_prefix}_sigs")
-    bsig = _signature_table(batch, text_col, id_col, num_hashes, hash_fn, materialize)
+    bsig = _signature_table(batch, text_col, id_col, num_hashes, hash_fn)
     bband = _band_table(bsig, num_hashes, bands, hash_fn)
     return _probe_admission(
         batch, bband, bsig, cband, csig, num_hashes, threshold, id_col
@@ -615,7 +612,6 @@ def cross_snapshot_neardup(
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     statuses: tuple[str, ...] = ("added", "changed"),
-    materialize: bool = True,
 ) -> DataFrame:
     """Cross-snapshot FUZZY dedup — the temporal member of the MinHash
     family: how much of a crawl's "new" content is actually recycled
@@ -647,27 +643,27 @@ def cross_snapshot_neardup(
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     diff = snapshot_diff(old, new, id_col, text_col)
-    delta_ids = diff.where(F.col("status").isin(*statuses)).select(
-        F.col(id_col), "status"
+    # delta_ids feeds THREE consumers (the delta semi-join, the probe
+    # and the final status join): unmaterialized, the snapshot_diff
+    # full-outer join — two corpus exchanges plus an md5 over the
+    # full text of BOTH snapshots — re-executes per consumer
+    # (measured 3× in the sf0.1 plan, r13). The checkpoint is
+    # delta-sized narrow rows (id, status), and its known size lets
+    # the planner broadcast the downstream joins instead of
+    # sort-merging corpus-keyed exchanges.
+    delta_ids = pin(
+        diff.where(F.col("status").isin(*statuses)).select(
+            F.col(id_col), "status"
+        )
     )
-    if materialize and not new.isStreaming:
-        # delta_ids feeds THREE consumers (the delta semi-join, the probe
-        # and the final status join): unmaterialized, the snapshot_diff
-        # full-outer join — two corpus exchanges plus an md5 over the
-        # full text of BOTH snapshots — re-executes per consumer
-        # (measured 3× in the sf0.1 plan, r13). The checkpoint is
-        # delta-sized narrow rows (id, status), and its known size lets
-        # the planner broadcast the downstream joins instead of
-        # sort-merging corpus-keyed exchanges.
-        delta_ids = delta_ids.localCheckpoint(eager=True)
     # No broadcast hint: the delta scales with crawl churn (a full
     # re-crawl makes it corpus-sized), so pinning a broadcast here would
     # build a corpus-proportional table on the driver at volume. AQE
     # broadcasts it at runtime when it is actually small.
     delta = new.join(delta_ids.select(id_col), id_col, "left_semi")
-    bsig = _signature_table(delta, text_col, id_col, num_hashes, hash_fn, materialize)
+    bsig = _signature_table(delta, text_col, id_col, num_hashes, hash_fn)
     bband = _band_table(bsig, num_hashes, bands, hash_fn)
-    csig = _signature_table(old, text_col, id_col, num_hashes, hash_fn, materialize)
+    csig = _signature_table(old, text_col, id_col, num_hashes, hash_fn)
     cband = _band_table(csig, num_hashes, bands, hash_fn)
     probe = _probe_admission(
         delta, bband, bsig, cband, csig, num_hashes, threshold, id_col
@@ -747,8 +743,16 @@ def resolve_clusters(
     the contract can only be checked at the call site.
     """
     a_col, b_col = pair_cols
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    edges = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # symmetrized by one explode, so the pair plan executes once (a
+    # union of both directions would run it per branch)
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+                F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
     if not pairs_canonical:
         edges = edges.where(F.col("u") != F.col("v")).distinct()
     # pairs_canonical=True: the caller guarantees pairs are UNIQUE with a
@@ -757,14 +761,16 @@ def resolve_clusters(
     # duplicate-free by construction and the pair-graph-sized dedup
     # shuffle before the edge checkpoint is skipped (r14, guide §2.4:
     # "a distinct on data that is already unique").
+    # static across rounds; checkpoint severs the (possibly expensive)
+    # upstream pair-generation lineage so it executes exactly once — the
+    # only read of ``pairs``
+    ck = Checkpoints()
+    edges = ck.pin(edges)
     if docs is not None:
         nodes = docs.select(F.col(id_col).alias("node")).distinct()
     else:
         nodes = edges.select(F.col("u").alias("node")).distinct()
-    # static across rounds; checkpoint severs the (possibly expensive)
-    # upstream pair-generation lineage so it executes exactly once
-    edges = edges.localCheckpoint(eager=True)
-    # LAZY localCheckpoint: the plan is severed to a LogicalRDD immediately
+    # LAZY checkpoint: the plan is severed to a LogicalRDD immediately
     # (each round references labels three times — without severing, the
     # plan tree would TRIPLE per round, exponential in rounds), but the
     # RDD materializes during the convergence-sum action below, so each
@@ -773,15 +779,14 @@ def resolve_clusters(
     # min(neighbor id), no labels join needed) — the mandatory init job
     # does a full round's work instead of summing an identity table.
     first = edges.groupBy("u").agg(F.min("v").alias("nbr0"))
-    labels = (
-        nodes.join(first, nodes["node"] == first["u"], "left")
-        .select(
+    labels = ck.pin(
+        nodes.join(first, nodes["node"] == first["u"], "left").select(
             nodes["node"],
             F.least(nodes["node"], F.coalesce(first["nbr0"], nodes["node"])).alias(
                 "label"
             ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        lazy=True,
     )
     # labels are node ids (non-negative longs); decimal sum is overflow-proof
     _sum = lambda df: df.agg(
@@ -795,9 +800,7 @@ def resolve_clusters(
     # every round's label table + contracted edge list stays pinned in
     # block storage for the life of the session (BENCH_r04: 26 s solo →
     # 44 s mid-sequence from exactly this retention).
-    tracker = CheckpointTracker(lag=2)
-    tracker.add(edges, labels)
-    tracker.round_done()
+    ck.round_done()
     converged = False
     cur_edges = edges
     for _ in range(max_iter):
@@ -817,15 +820,14 @@ def resolve_clusters(
         jump = labels.select(
             F.col("node").alias("jn"), F.col("label").alias("jl")
         )
-        nxt = (
-            upd.join(jump, upd["label"] == jump["jn"], "left")
-            .select(
+        nxt = ck.pin(
+            upd.join(jump, upd["label"] == jump["jn"], "left").select(
                 upd["node"],
                 F.least(upd["label"], F.coalesce(jump["jl"], upd["label"])).alias(
                     "label"
                 ),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            lazy=True,
         )
         # Contract the edge list through the new labels (distinct
         # (label(u), label(v)), self-loops dropped): near-dup components
@@ -837,28 +839,27 @@ def resolve_clusters(
         # the loop converges first, the unused plan never executes.
         lu = nxt.select(F.col("node").alias("u"), F.col("label").alias("lu"))
         lv = nxt.select(F.col("node").alias("v"), F.col("label").alias("lv"))
-        cur_edges = (
+        cur_edges = ck.pin(
             cur_edges.join(lu, "u")
             .join(lv, "v")
             .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
             .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            lazy=True,
         )
-        tracker.add(nxt, cur_edges)
         cur_sum = _sum(nxt)  # one job: materializes the round AND checks it
-        tracker.round_done()  # release the round now 2 rounds stale
+        ck.round_done()  # release the round now 2 rounds stale
         labels = nxt
         if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
     if not converged:
-        tracker.release_all(keep=labels)
+        ck.release()
         raise RuntimeError(
             f"resolve_clusters did not converge within max_iter={max_iter} rounds"
         )
-    tracker.release_all(keep=labels)
+    ck.release(keep=labels)
     out = labels.select(
         F.col("node").alias(id_col), F.col("label").alias("cluster_rep")
     )
@@ -1029,8 +1030,10 @@ def corpus_dedup(
     Pure composition of :func:`minhash_lsh_pairs` (banded LSH — never
     all-pairs) and :func:`resolve_clusters` (hash-min + pointer-jumping
     components, one job per round, superseded checkpoints released), so
-    its scale posture is exactly theirs."""
-    pairs = minhash_lsh_pairs(
+    its scale posture is exactly theirs. The pairs' signature checkpoint
+    is released once the components have read the pairs."""
+    ck = Checkpoints()
+    pairs = ck.own(minhash_lsh_pairs(
         docs,
         text_col=text_col,
         id_col=id_col,
@@ -1038,11 +1041,12 @@ def corpus_dedup(
         bands=bands,
         threshold=threshold,
         hash_fn=hash_fn,
-    )
+    ))
     # minhash_lsh_pairs output is deduped with id_a < id_b — canonical
     resolved = resolve_clusters(
         pairs, docs=docs, id_col=id_col, pairs_canonical=True
     )
+    ck.release(keep=resolved)
     return resolved.withColumn(
         "is_kept", F.col(id_col) == F.col("cluster_rep")
     )

@@ -9,9 +9,10 @@ SQL oracle — same verification standard as the rest of the repo, rare for
 an iterative algorithm.
 
 Same execution shape as :func:`..dedup.resolve_clusters`: static edge
-list checkpointed once, per-round lazy localCheckpoint (plan severed
+list checkpointed once, per-round lazy checkpoint (plan severed
 immediately, materialized by that round's single action), bounded
-shuffles on uniform node keys.
+shuffles on uniform node keys. Every operator that re-reads its input
+pins it itself, so callers pass plain edge plans (see :mod:`..ckpt`).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ckpt import CheckpointTracker
+from ..ckpt import Checkpoints, pin
 
 MICRO = 1_000_000  # fixed-point scale: rank 1.0 == 1_000_000 micro-units
 
@@ -53,9 +54,10 @@ def pagerank(
     the seed set instead of global centrality. ``None`` = uniform
     (classic PageRank). Same integer update either way.
 
-    Scale shape: out-degrees and the edge list are computed once and
-    checkpointed (edges re-partitioned by src carry (src, dst, deg) — 24
-    bytes/edge); each round is one equi-join edges⋈ranks on src, one
+    Scale shape: the input edge plan is read once, into a checkpoint that
+    the node spine, the out-degrees and the degree-annotated edge list
+    (itself checkpointed: (src, dst, deg), 24 bytes/edge) all read; each
+    round is one equi-join edges⋈ranks on src, one
     sum-aggregate on dst (map-side combinable), one left join back to the
     node spine — all shuffles on uniform node keys, one Spark job per
     round via the lazy-checkpoint-plus-action pattern."""
@@ -63,24 +65,24 @@ def pagerank(
         raise ValueError(f"iters must be >= 1, got {iters}")
     d_micro = int(round(damping * MICRO))
     base = MICRO - d_micro
-    tracker = CheckpointTracker()
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
+    ck = Checkpoints()
+    # four consumers: both node-spine branches, out-degrees, edeg
+    e = ck.pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
+    nodes = ck.pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        lazy=True,
     )
-    tracker.add(nodes)
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    edeg = e.join(deg, "src").localCheckpoint(eager=True)
-    tracker.add(edeg)
+    edeg = ck.pin(e.join(deg, "src"))
     if restart is not None:
         seeds = restart.select(F.col("node")).distinct().withColumn(
             "__seed", F.lit(1)
         )
-        nodes = nodes.join(seeds, "node", "left").localCheckpoint(eager=False)
-        tracker.add(nodes)
+        nodes = ck.pin(nodes.join(seeds, "node", "left"), lazy=True)
         seed_flag = F.col("__seed").isNotNull()
         base_col = F.when(seed_flag, F.lit(base)).otherwise(F.lit(0))
         ranks = nodes.select(
@@ -106,7 +108,7 @@ def pagerank(
         # wraps bigint once a hub's contrib passes ~1.08e10 micro-units
         # (~10^7 in-neighbors), silently going negative with ANSI mode
         # off. Here d·r < 10^12 and d·q < d·(total mass/M) = d·N.
-        ranks = (
+        ranks = ck.pin(
             nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .select(
                 nodes["node"],
@@ -117,16 +119,15 @@ def pagerank(
                         f"+ (CAST({d_micro} AS BIGINT) * (coalesce(contrib, 0) % {MICRO})) div {MICRO}"
                     )
                 ).cast("bigint").alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            lazy=True,
         )
-        tracker.add(ranks)
     # One action materializes the whole lazy-checkpoint cascade (the same
     # single job the caller's first action would have run); afterwards
-    # every superseded round table + the degree-annotated edge list is
-    # released — only the final ranks stay pinned.
+    # every superseded round table, the input and the degree-annotated
+    # edge list are released — only the final ranks stay pinned.
     ranks.count()
-    tracker.release_all(keep=ranks)
+    ck.release(keep=ranks)
     return ranks
 
 
@@ -155,7 +156,7 @@ def triangle_count(
     deterministic, so exactly oracle-able.
 
     The cleaned edge list and the oriented edge list are each
-    localCheckpoint-materialized ONCE (r13): both have multiple
+    checkpointed ONCE (r13): both have multiple
     consumers (canon feeds the degree aggregate twice plus the
     orientation join; oriented feeds the three path/closure joins), so
     the un-severed plan re-executed the upstream edge-building subtree —
@@ -168,14 +169,13 @@ def triangle_count(
     after consuming the result (the ckpt-module pinned-RDD budget —
     bench.py and check_oracle.py both do)."""
     raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    canon = (
+    canon = pin(
         raw.where(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"),
             F.greatest("a", "b").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         canon.select(F.col("a").alias("v"))
@@ -190,10 +190,12 @@ def triangle_count(
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = with_deg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    ).localCheckpoint(eager=True)
+    oriented = pin(
+        with_deg.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+        )
+    )
     e1 = oriented.select(F.col("src").alias("x"), F.col("dst").alias("y"))
     e2 = oriented.select(F.col("src").alias("y"), F.col("dst").alias("z"))
     e3 = oriented.select(F.col("src").alias("x"), F.col("dst").alias("z"))
@@ -234,10 +236,14 @@ def label_propagation(
     asc"), not a sort-based window: map-side combinable and no per-node
     sort, which matters when a hub node collects millions of votes — then
     one left join back to the node spine. All shuffles on uniform node
-    keys, plans severed per round by lazy localCheckpoint."""
-    raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    tracker = CheckpointTracker()
-    e = (
+    keys, plans severed per round by lazy checkpoints. The input is read
+    once: both symmetrize-union branches of the edge list and both
+    node-spine branches read its checkpoint."""
+    ck = Checkpoints()
+    raw = ck.pin(
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    )
+    e = ck.pin(
         raw.where(F.col("a") != F.col("b"))
         .select("a", "b")
         .unionByName(
@@ -246,15 +252,12 @@ def label_propagation(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = ck.pin(
         raw.select(F.col("a").alias("node"))
         .unionByName(raw.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    tracker.add(e, nodes)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iters):
         votes = (
@@ -274,19 +277,18 @@ def label_propagation(
             )
             .select("node", F.col("top.label").alias("new_label"))
         )
-        labels = (
-            nodes.join(best, "node", "left")
-            .select(
+        labels = ck.pin(
+            nodes.join(best, "node", "left").select(
                 "node",
                 F.coalesce("new_label", F.col("node")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            lazy=True,
         )
-        tracker.add(labels)
     # materialize the cascade once, then release every superseded round
-    # table and the edge/node checkpoints — only final labels stay pinned
+    # table and the input/edge/node checkpoints — only final labels stay
+    # pinned
     labels.count()
-    tracker.release_all(keep=labels)
+    ck.release(keep=labels)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -312,13 +314,13 @@ def kcore(
     non-increasing and strictly decreases iff any vertex was peeled).
     Rounds are O(peeling depth), in practice ≤ a dozen even on power-law
     graphs; superseded per-round edge checkpoints are released with the
-    2-round-lag tracker. Deterministic (no tie-breaks — peeling is
+    :mod:`..ckpt` owner's 2-round lag. Deterministic (no tie-breaks — peeling is
     order-independent), hence exactly SQL-oracle-able by unrolling."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    tracker = CheckpointTracker()
-    cur = (
+    ck = Checkpoints()
+    cur = ck.pin(
         raw.where(F.col("u") != F.col("v"))
         .unionByName(
             raw.where(F.col("u") != F.col("v")).select(
@@ -326,10 +328,8 @@ def kcore(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    tracker.add(cur)
-    tracker.round_done()
+    ck.round_done()
     prev_n = cur.count()
     if prev_n == 0:
         return cur.select(
@@ -339,15 +339,14 @@ def kcore(
     for _ in range(max_iter):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.where(F.col("d") >= k).select("u")
-        nxt = (
+        nxt = ck.pin(
             cur.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
+            .select("u", "v"),
+            lazy=True,
         )
-        tracker.add(nxt)
         n = nxt.count()  # one job: materializes the round AND tests it
-        tracker.round_done()
+        ck.round_done()
         cur = nxt
         if n == prev_n:
             converged = True
@@ -357,13 +356,13 @@ def kcore(
             converged = True
             break
     if not converged:
-        tracker.release_all(keep=cur)
+        ck.release()
         raise RuntimeError(f"kcore did not converge within max_iter={max_iter}")
     out = cur.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_degree")
     )
     # the result aggregates over the final checkpoint — keep exactly it
-    tracker.release_all(keep=cur)
+    ck.release(keep=cur)
     return out
 
 
@@ -402,8 +401,8 @@ def betweenness(
     if max_depth < 2:
         raise ValueError(f"max_depth must be >= 2, got {max_depth}")
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    tracker = CheckpointTracker()
-    e = (
+    ck = Checkpoints()
+    e = ck.pin(
         raw.where(F.col("u") != F.col("v"))
         .unionByName(
             raw.where(F.col("u") != F.col("v")).select(
@@ -411,12 +410,8 @@ def betweenness(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=True)
-    )
-    tracker.add(e, nodes)
+    nodes = ck.pin(e.select(F.col("u").alias("node")).distinct())
     srcs = (
         sources.select("node").distinct() if sources is not None else nodes
     )
@@ -433,19 +428,16 @@ def betweenness(
             .join(e, frontiers[-1]["node"] == e["u"])
             .select("s", F.col("v").alias("node"), "sigma")
         )
-        newf = (
+        newf = ck.pin(
             cand.groupBy("s", "node")
             .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, ["s", "node"], "left_anti")
-            .localCheckpoint(eager=False)
+            .join(visited, ["s", "node"], "left_anti"),
+            lazy=True,
         )
-        tracker.add(newf)
         frontiers.append(newf)
-        visited = (
-            visited.unionByName(newf.select("s", "node"))
-            .localCheckpoint(eager=False)
+        visited = ck.pin(
+            visited.unionByName(newf.select("s", "node")), lazy=True
         )
-        tracker.add(visited)
     # backward accumulation: δ at the deepest level is 0 (no successors)
     delta = None  # (s, node, delta_micro) for the level BELOW the current one
     contribs = []
@@ -468,17 +460,16 @@ def betweenness(
             )
         else:
             joined = joined.withColumn("dw", F.lit(0))
-        delta = (
+        delta = ck.pin(
             joined.select(
                 "s",
                 "node",
                 F.expr(f"(sigma * ({MICRO} + dw)) div sigma_w").alias("c"),
             )
             .groupBy("s", "node")
-            .agg(F.sum("c").alias("delta_micro"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("c").alias("delta_micro")),
+            lazy=True,
         )
-        tracker.add(delta)
         contribs.append(delta)
     total = contribs[0]
     for extra in contribs[1:]:
@@ -486,16 +477,15 @@ def betweenness(
     bet = total.groupBy("node").agg(
         F.expr("sum(delta_micro) div 2").alias("bet_micro")
     )
-    out = (
-        nodes.join(bet, "node", "left")
-        .select(
+    out = ck.pin(
+        nodes.join(bet, "node", "left").select(
             "node",
             F.coalesce("bet_micro", F.lit(0)).cast("bigint").alias("bet_micro"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        lazy=True,
     )
     out.count()  # materialize the full cascade once
-    tracker.release_all(keep=out)
+    ck.release(keep=out)
     return out
 
 
@@ -527,8 +517,8 @@ def closeness(
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    tracker = CheckpointTracker()
-    e = (
+    ck = Checkpoints()
+    e = ck.pin(
         raw.where(F.col("u") != F.col("v"))
         .unionByName(
             raw.where(F.col("u") != F.col("v")).select(
@@ -536,31 +526,23 @@ def closeness(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=True)
-    )
-    tracker.add(e, nodes)
+    nodes = ck.pin(e.select(F.col("u").alias("node")).distinct())
     srcs = sources.select("node").distinct() if sources is not None else nodes
     frontier = srcs.select(F.col("node").alias("s"), F.col("node"))
     visited = frontier
     reached = []  # (s, node, dist) per level
     for d in range(1, max_depth + 1):
-        nxt = (
+        nxt = ck.pin(
             frontier.join(e, frontier["node"] == e["u"])
             .select("s", F.col("v").alias("node"))
             .distinct()
-            .join(visited, ["s", "node"], "left_anti")
-            .localCheckpoint(eager=False)
+            .join(visited, ["s", "node"], "left_anti"),
+            lazy=True,
         )
-        tracker.add(nxt)
         reached.append(nxt.withColumn("dist", F.lit(d)))
         frontier = nxt
-        visited = (
-            visited.unionByName(nxt).localCheckpoint(eager=False)
-        )
-        tracker.add(visited)
+        visited = ck.pin(visited.unionByName(nxt), lazy=True)
     allr = reached[0]
     for extra in reached[1:]:
         allr = allr.unionByName(extra)
@@ -568,9 +550,8 @@ def closeness(
         F.count(F.lit(1)).cast("bigint").alias("n_reached"),
         F.sum("dist").cast("bigint").alias("dist_sum"),
     )
-    out = (
-        nodes.join(per_src, "node", "left")
-        .select(
+    out = ck.pin(
+        nodes.join(per_src, "node", "left").select(
             "node",
             F.coalesce("n_reached", F.lit(0)).cast("bigint").alias("n_reached"),
             F.coalesce("dist_sum", F.lit(0)).cast("bigint").alias("dist_sum"),
@@ -581,11 +562,11 @@ def closeness(
             .otherwise(F.lit(0))
             .cast("bigint")
             .alias("closeness_micro"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        lazy=True,
     )
     out.count()
-    tracker.release_all(keep=out)
+    ck.release(keep=out)
     return out
 
 
@@ -595,7 +576,6 @@ def linkpred_scores(
     dst: str = "dst",
     max_hub_degree: int = 1000,
     min_common: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Neighbor-overlap link prediction for SRC-node pairs of a bipartite
     (or directed) edge list: two src nodes sharing many dst neighbors are
@@ -624,14 +604,12 @@ def linkpred_scores(
     self-join and the (a,b) pair aggregation — both on uniform keys
     after the cap.
 
-    ``materialize=True`` localCheckpoints the capped edge list once:
-    three consumers read it (src degrees, both self-join sides), so the
-    lazy form re-executes the distinct+cap subtree three times — r11
-    solo series on the bench entry: lazy [11.2, 6.4, 6.0, 3.8, 3.4]
-    seconds vs materialized [4.6, 3.4, 2.9, 3.0, 2.9] — both 2× faster
-    at the median and far less variant (the re-executed subtree's
-    variance compounds). Same tradeoff knob as ks_2sample/psi_report;
-    identical results either way.
+    The capped edge list is checkpointed once: three consumers read it
+    (src degrees, both self-join sides), so the lazy form re-executed the
+    distinct+cap subtree three times — r11 solo series on the bench
+    entry: lazy [11.2, 6.4, 6.0, 3.8, 3.4] seconds vs materialized [4.6,
+    3.4, 2.9, 3.0, 2.9], 2× faster at the median and far less variant.
+    The returned plan reads the checkpoint (the :mod:`..ckpt` budget).
 
     Returns ``(src_a, src_b, common, jaccard_ppm, ra_ppm)`` with
     ``src_a < src_b``.
@@ -639,9 +617,7 @@ def linkpred_scores(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
     dst_deg = e.groupBy("d").agg(F.count("*").alias("deg_d"))
     keep = dst_deg.where(F.col("deg_d") <= int(max_hub_degree))
-    e_capped = e.join(keep, "d")
-    if materialize:
-        e_capped = e_capped.localCheckpoint(eager=True)
+    e_capped = pin(e.join(keep, "d"))
     src_deg = e_capped.groupBy("s").agg(F.count("*").alias("deg_s"))
 
     a = e_capped.select(F.col("d"), F.col("s").alias("src_a"), "deg_d")
@@ -713,10 +689,9 @@ def ktruss(
         )
         .distinct()
     )
-    tracker = CheckpointTracker()
-    cur = canon.localCheckpoint(eager=True)
-    tracker.add(cur)
-    tracker.round_done()
+    ck = Checkpoints()
+    cur = ck.pin(canon)
+    ck.round_done()
     prev_n = cur.count()
     empty = cur.select(
         F.col("u").alias("src"),
@@ -740,30 +715,25 @@ def ktruss(
     if need == 0:
         # 2-truss: every edge survives trivially (support >= 0); report
         # support without peeling
-        out = (
-            cur.join(support_of(cur), ["u", "v"], "left")
-            .select(
+        out = ck.pin(
+            cur.join(support_of(cur), ["u", "v"], "left").select(
                 F.col("u").alias("src"),
                 F.col("v").alias("dst"),
                 F.coalesce("support", F.lit(0)).cast("bigint").alias("support"),
             )
-            .localCheckpoint(eager=True)
         )
-        tracker.release_all(keep=out)
+        ck.release(keep=out)
         return out
     converged = False
     for _ in range(max_iter):
         sup = support_of(cur)
         # edges in zero triangles are absent from sup and correctly
         # drop out here (0 < need)
-        nxt = (
-            sup.where(F.col("support") >= need)
-            .select("u", "v")
-            .localCheckpoint(eager=False)
+        nxt = ck.pin(
+            sup.where(F.col("support") >= need).select("u", "v"), lazy=True
         )
-        tracker.add(nxt)
         n = nxt.count()  # one job: materializes the round AND tests it
-        tracker.round_done()
+        ck.round_done()
         cur = nxt
         if n == prev_n or n == 0:
             converged = True  # fixed point, or nothing left to peel
@@ -771,18 +741,18 @@ def ktruss(
             break
         prev_n = n
     if not converged:
-        tracker.release_all(keep=cur)
+        ck.release()
         raise RuntimeError(f"ktruss did not converge within max_iter={max_iter}")
     if prev_n == 0:
-        tracker.release_all()
+        ck.release()
         return empty
     out = support_of(cur).select(
         F.col("u").alias("src"),
         F.col("v").alias("dst"),
         F.col("support").cast("bigint").alias("support"),
     )
-    out = out.localCheckpoint(eager=True)
-    tracker.release_all(keep=out)
+    out = ck.pin(out)
+    ck.release(keep=out)
     return out
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..ckpt import pin
 from .text import tokens
 
 __all__ = [
@@ -201,9 +202,9 @@ def bm25_scores(
     # tokenize→explode→tf aggregation — the expensive stage — and `hits`
     # is posting-list-sized by construction (only query-term rows), so
     # the checkpoint is bounded by the query batch, never the corpus
-    hits = tf.join(
-        F.broadcast(qterm.select("term").distinct()), "term", "inner"
-    ).localCheckpoint(eager=True)
+    hits = pin(
+        tf.join(F.broadcast(qterm.select("term").distinct()), "term", "inner")
+    )
     df_t = hits.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -299,11 +300,11 @@ def phrase_search(
     Returns ``(qid, doc_id, n_occurrences)`` — one row per document
     containing the phrase at least once.
 
-    Caveats of the posting-table ``localCheckpoint`` (deliberate trade):
-    its RDD stays registered for the SESSION lifetime — a caller issuing
-    many phrase batches in one long-lived session should clear residue
-    between batches (``for r in sc._jsc.getPersistentRDDs().values():
-    r.unpersist()``, as bench.py does); and checkpoint blocks are not
+    Caveats of the posting-table checkpoint (deliberate trade): the
+    returned plan reads it, so it stays pinned until the consumer releases
+    it (a ``ckpt.Checkpoints`` owner ``own``s the result and
+    ``release``s it once consumed, or a ``getPersistentRDDs`` sweep as
+    bench.py does); and checkpoint blocks are not
     recomputable on executor loss (executor-local storage, no lineage) —
     acceptable for an interactive/batch query, use ``persist()`` +
     re-derivation in a long-running service."""
@@ -316,16 +317,15 @@ def phrase_search(
             raise ValueError(f"empty phrase for qid {qid!r}")
         parsed.append((qid, words))
     vocab = sorted({w for _, ws in parsed for w in ws})
-    post = (
+    # referenced once per phrase token across the batch — materialize
+    # the (tiny, vocabulary-filtered) posting table instead of
+    # re-scanning the corpus k×B times
+    post = pin(
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(tokens(F.col(text_col))).alias("pos", "term"),
-        )
-        .where(F.col("term").isin(vocab))
-        # referenced once per phrase token across the batch — materialize
-        # the (tiny, vocabulary-filtered) posting table instead of
-        # re-scanning the corpus k×B times
-        .localCheckpoint(eager=False)
+        ).where(F.col("term").isin(vocab)),
+        lazy=True,
     )
     parts = []
     for qid, words in parsed:
@@ -648,11 +648,13 @@ def ranking_metrics(
     # ideal-gain window, the n_rel aggregate) otherwise re-execute the
     # caller's whole qrels pipeline per consumer; judgment lists are
     # eval-set-sized by nature, so the checkpoint is small by contract
-    q = qrels.select(
-        F.col(qid_col).alias("qid"),
-        F.col(doc_col).alias("doc"),
-        F.col(rel_col).cast("bigint").alias("rel"),
-    ).localCheckpoint(eager=True)
+    q = pin(
+        qrels.select(
+            F.col(qid_col).alias("qid"),
+            F.col(doc_col).alias("doc"),
+            F.col(rel_col).cast("bigint").alias("rel"),
+        )
+    )
     j = r.join(q, ["qid", "doc"], "left").select(
         "qid",
         "rk",

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import Checkpoints, pin
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -549,7 +551,7 @@ def ivf_build(
         ).repartition(1).write.mode("overwrite").parquet(path + "/centroids")
         assigned = spark.read.parquet(path + "/assigned")
     elif materialize:
-        assigned = assigned.localCheckpoint(eager=True)
+        assigned = pin(assigned)
     return IvfIndex(cent_rows, assigned)
 
 
@@ -582,11 +584,14 @@ def ivf_query(
     # lazy checkpoint: severs the GEMM lineage (q feeds both the probed-id
     # collect and the broadcast join) while the materializing job is the
     # collect itself — no separate checkpoint job
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(assignN(F.col(vec_col))).alias("list_id"),
-    ).localCheckpoint(eager=False)
+    q = pin(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+            F.explode(assignN(F.col(vec_col))).alias("list_id"),
+        ),
+        lazy=True,
+    )
     probed = [r["list_id"] for r in q.select("list_id").distinct().collect()]
     scored = (
         index.assigned.where(F.col("list_id").isin(probed))
@@ -793,7 +798,8 @@ def semantic_dedup(
     )
     # three consumers (both pair-join sides + nothing else re-derives it);
     # without this the Arrow assignment UDF runs once per consumer
-    assigned = assigned.localCheckpoint(eager=True)
+    ck = Checkpoints()
+    assigned = ck.pin(assigned)
     a, b = assigned.alias("a"), assigned.alias("b")
     sim = F.round(
         _dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm")),
@@ -810,6 +816,7 @@ def semantic_dedup(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
     res = resolve_clusters(pairs, docs=corpus, id_col=id_col)
+    ck.release(keep=res)  # the components' edge checkpoint read the pairs
     return res.withColumn("keep", F.col(id_col) == F.col("cluster_rep"))
 
 
@@ -1007,12 +1014,15 @@ def knn_graph(
         key=lambda r: r["list_id"],
     )
     nearest = _nearest_lists_udf(corpus, cent_rows, vec_col, 1)
-    assigned = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-        F.element_at(nearest(F.col(vec_col)), 1).alias("list_id"),
-    ).localCheckpoint(eager=True)  # both join sides reuse one assignment
+    # both join sides reuse one assignment
+    assigned = pin(
+        corpus.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            _norm(F.col(vec_col)).alias("nrm"),
+            F.element_at(nearest(F.col(vec_col)), 1).alias("list_id"),
+        )
+    )
     a, b = assigned.alias("a"), assigned.alias("b")
     sim = F.round(
         _dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm")),
@@ -1093,11 +1103,12 @@ def beam_search_topk(
         F.col(vec_col).alias("qvec"),
         _norm(F.col(vec_col)).alias("qnrm"),
     )
+    ck = Checkpoints()
     if indexed:
         spark = corpus.sparkSession
     else:
         # one materialization; every round's expansion re-reads it locally
-        adj = adjacency.select("id", "neighbor_id").localCheckpoint(eager=True)
+        adj = ck.pin(adjacency.select("id", "neighbor_id"))
     entry = (
         corpus.select(
             F.col(id_col).cast("string").alias("cid"),
@@ -1129,7 +1140,7 @@ def beam_search_topk(
         .crossJoin(F.broadcast(entry))
         .where(F.col("cand_id") != F.col("query_id"))
     )
-    visited = _score(seeds).localCheckpoint(eager=True)
+    visited = ck.pin(_score(seeds))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
     for r in range(rounds):
         beam_df = (
@@ -1170,8 +1181,8 @@ def beam_search_topk(
         # broadcast-join shape stays visible in the returned plan, pinned
         # in tests)
         if r < rounds - 1:
-            visited = visited.localCheckpoint(eager=True)
-    return (
+            visited = ck.pin(visited)
+    out = (
         visited.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .where(F.col("rank") <= k)
         .select(
@@ -1181,6 +1192,8 @@ def beam_search_topk(
             "rank",
         )
     )
+    ck.release(keep=out)  # superseded rounds' visited sets
+    return out
 
 
 def ivfpq_topk(
@@ -1637,6 +1650,7 @@ def kcenter_select(
 
     seed = q.orderBy("id").limit(1).collect()[0]
     picked = [(0, seed["id"], 0)]
+    ck = Checkpoints()
     state = q.where(F.col("id") != seed["id"]).withColumn(
         "dmin", dist_to(seed["qv"])
     )
@@ -1654,7 +1668,8 @@ def kcenter_select(
             "dmin", F.least(F.col("dmin"), dist_to(row["qv"]))
         )
         if r % 4 == 0:
-            state = state.localCheckpoint(eager=False)
+            state = ck.pin(state, lazy=True)
+    ck.release()
     return emb.sparkSession.createDataFrame(
         picked, "rank int, vec_id bigint, dmin_q bigint"
     )

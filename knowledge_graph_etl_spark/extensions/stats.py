@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import pin
 from .hashing import md5_u60
 
 
@@ -1150,7 +1151,6 @@ def ks_2sample(
     group_col: str,
     value_col: str,
     quant_scale: int = 1000,
-    materialize: bool = False,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov distance between every PAIR of
     groups' value distributions — the distribution-shape drift test that
@@ -1178,21 +1178,13 @@ def ks_2sample(
     all-pairs expansion then runs on histogram rows only (×(|G|−1)
     fan-out of the histogram, never of raw rows), one window pass per
     merged grid. |G| is segment/crawl cardinality — small by
-    construction for a drift report. Known tradeoff (plan-audited): the
-    lazy histogram subtree is referenced three times (totals + both
-    pair sides), so by default Catalyst scans the source thrice; the
-    operator deliberately stays lazy rather than persisting internally,
-    which would leak cache past the caller's control (the
-    checkpoint-hygiene rule from search.py). For one-shot 100 TB drift
-    reports pass ``materialize=True``: the per-group histogram (bounded
-    by Σ per-group distinct quantized values — tiny next to the corpus)
-    is eagerly ``localCheckpoint``-ed, so the source is scanned ONCE and
-    all three consumers read the checkpoint. The opt-in keeps the
-    hygiene contract explicit: the returned plan references the
-    checkpoint, so the CALLER releases it after consuming the result
-    (``ckpt.release_new_checkpoints`` or a ``getPersistentRDDs`` sweep —
-    both harnesses already do), same accepted pinned-RDD budget as
-    ``knn_graph``/``select_token_budget``.
+    construction for a drift report. The histogram subtree is referenced
+    three times (totals + both pair sides), so the per-group histogram
+    (bounded by Σ per-group distinct quantized values — tiny next to the
+    corpus) is checkpointed: the source is scanned ONCE and all three
+    consumers read the checkpoint. The returned plan references it, so
+    whoever consumes the result releases it — the :mod:`..ckpt`
+    pinned-RDD budget, same as ``knn_graph``/``select_token_budget``.
 
     Returns ``(group_a, group_b, n_a, n_b, d_num, d_ppm)`` for ordered
     pairs ``group_a < group_b``.
@@ -1217,8 +1209,7 @@ def ks_2sample(
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    if materialize:
-        hist = hist.localCheckpoint(eager=True)
+    hist = pin(hist)
     totals = hist.groupBy("g").agg(F.sum("cnt").cast("bigint").alias("n"))
     groups = totals.select("g", "n")
     pairs = (
@@ -1532,7 +1523,6 @@ def psi_report(
     value_col: str,
     bins: int = 10,
     quant_scale: int = 1000,
-    materialize: bool = False,
 ) -> DataFrame:
     """Population Stability Index between a reference and a current
     sample of the same column — the binned drift score ML-ops gates ship
@@ -1555,18 +1545,13 @@ def psi_report(
 
     Scale shape: one histogram aggregate per side + a broadcast of the
     ≤ ``bins`` edge rows; everything past the histograms is bin-sized.
-    Known tradeoff (plan-audited, the ks_2sample convention): the lazy
-    edge/histogram subtrees are referenced by several consumers, so the
-    logical plan carries multiple source scans — runtime ReusedExchange
-    collapses some, and for repeated 100 TB drift reports the caller
-    should ``.cache()`` the quantized inputs; the operator deliberately
-    stays lazy rather than persisting internally. For one-shot reports
-    pass ``materialize=True``: the ONE-ROW edge vector and the
-    bin-sized joined counts are eagerly ``localCheckpoint``-ed, so the
-    op costs exactly three source passes total (reference histogram at
-    edge time, one binning pass per side) — same caller-releases-the-
-    checkpoint contract as ``ks_2sample(materialize=...)`` (both
-    harnesses already sweep persistent RDDs). All joins are
+    Known tradeoff (plan-audited): the lazy edge/histogram subtrees have
+    several consumers, so the plan carries multiple source scans
+    (runtime ReusedExchange collapses some). The operator stays lazy on
+    measurement: checkpointing the one-row edge vector and the bin-sized
+    joined counts (three source passes total) made the sf0.1 bench entry
+    ``stats_psi`` 1.8 → 3.1 s median over 5 alternating pairs, the two
+    extra jobs costing more than the re-read tiny inputs save. All joins are
     broadcast (edge rows ≤ bins), no sort-merge join anywhere —
     pinned by tests/test_plan_evidence.py. Returns per bin: ``(bin_id,
     lo_edge, ref_cnt, cur_cnt, ref_ppm, cur_ppm, psi_micro)`` — total
@@ -1605,8 +1590,6 @@ def psi_report(
         for i in range(1, bins)
     ]
     edges = ranked.agg(*edge_aggs)
-    if materialize:
-        edges = edges.localCheckpoint(eager=True)
     edge_arr = F.array(*[F.col(f"e{i}") for i in range(1, bins)])
 
     def _binned(df: DataFrame, out: str) -> DataFrame:
@@ -1648,10 +1631,6 @@ def psi_report(
             F.coalesce(F.col("cur_cnt"), F.lit(0)).cast("bigint").alias("cur_cnt"),
         )
     )
-    if materialize:
-        # j is bin-sized; its two consumers (totals + shares) would
-        # otherwise re-run both binning passes
-        j = j.localCheckpoint(eager=True)
     totals = j.agg(
         F.sum("ref_cnt").cast("bigint").alias("_tr"),
         F.sum("cur_cnt").cast("bigint").alias("_tc"),

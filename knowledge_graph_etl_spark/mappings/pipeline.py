@@ -28,6 +28,7 @@ import time
 import urllib.request
 from urllib.parse import quote_plus
 
+from ..ckpt import pin
 from ..engine import GRAPH_NS, SOURCE_NS, Engine
 
 STAGING_GRAPHS = [
@@ -686,8 +687,8 @@ def _plan_updates(
     — verified over all 14 .sparql), so the derivations commute.
 
     Thread-per-update is the Spark-native translation of that fan-out:
-    the compile contexts are ``threading.local`` by design
-    (plans/compiler.py predicate_stats_context, federation.active_registry),
+    the compile context is ``threading.local`` by design
+    (federation.active_registry),
     the parser is pure, and concurrent driver threads submitting jobs is
     the standard way to keep a large cluster busy with many independent
     small-stage jobs — one 16-pattern mapping alone never fills 1000
@@ -708,13 +709,6 @@ def _plan_updates(
     if jobs > 1 and len(items) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        if engine.stats:
-            # warm the predicate-stats cache on the main thread: the
-            # per-thread _compile_ctx would otherwise race on the cold
-            # store._pred_stats cache and launch up to ``jobs`` redundant
-            # count-aggregate jobs (benign for correctness — each thread
-            # computes the same dict — but wasted cluster work)
-            engine.store.predicate_stats()
         with ThreadPoolExecutor(max_workers=min(jobs, len(items))) as ex:
             return list(ex.map(one, items))
     return [one(it) for it in items]
@@ -994,7 +988,7 @@ def run_pipeline_incremental(
                 .select("orid")
             )
             affected = affected.unionByName(orids)
-    affected = affected.distinct().localCheckpoint(eager=True)
+    affected = pin(affected.distinct())
 
     # 2b. affected user groups: the user ids of changed documents
     o_u, n_u, d_u = diffs["tl_users"]
@@ -1007,11 +1001,10 @@ def run_pipeline_incremental(
             .where(F.col("amid").isNotNull())
         )
         user_grps = amids if user_grps is None else user_grps.unionByName(amids)
-    affected_grps = (
+    affected_grps = pin(
         affected.select(_grp_col("org", "orid"))
         .unionByName(user_grps.select(_grp_col("user", "amid")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     counters = {"t_diff_closure": round(_time.time() - _t0, 1)}
     counters["affected_groups"] = affected_grps.count()
@@ -1027,17 +1020,14 @@ def run_pipeline_incremental(
             scratch.load_json(
                 _docs_df(spark, docs), f"{GRAPH_NS}{source}", namespace=SOURCE_NS
             )
-        led_df = _derive_ledger(
-            scratch, sparql_dir, env, jobs=jobs
-        ).localCheckpoint(eager=True)
+        led_df = pin(_derive_ledger(scratch, sparql_dir, env, jobs=jobs))
         ledger.write(led_df)
         led_df = ledger.read()
         counters["ledger_seeded"] = True
-    stale = (
+    stale = pin(
         led_df.join(F.broadcast(affected_grps), "grp", "left_semi")
         .select(*QUAD_COLUMNS)
         .dropDuplicates(QUAD_COLUMNS)
-        .localCheckpoint(eager=True)
     )
     counters["stale_quads"] = stale.count()
     counters["t_stale_lookup"] = round(_time.time() - _t0, 1)
@@ -1082,7 +1072,7 @@ def run_pipeline_incremental(
                 F.lit(source).alias("__src"), "doc_id", "json"
             )
             tagged = cdocs if tagged is None else tagged.unionByName(cdocs)
-        tagged = tagged.localCheckpoint(eager=True)
+        tagged = pin(tagged)
         by_src = {
             r["__src"]: r["n"]
             for r in tagged.groupBy("__src")
@@ -1159,9 +1149,11 @@ def run_pipeline_incremental(
         )
         counters["t_fresh_load"] = round(_time.time() - _t0, 1)
         _t0 = _time.time()
-        fresh_led = _derive_ledger(
-            scratch, sparql_dir, env, empty_sources=empty_sources, jobs=jobs
-        ).localCheckpoint(eager=True)
+        fresh_led = pin(
+            _derive_ledger(
+                scratch, sparql_dir, env, empty_sources=empty_sources, jobs=jobs
+            )
+        )
     counters["fresh_ledger_rows"] = fresh_led.count()
     counters["t_fresh_plan"] = round(_time.time() - _t0, 1)
 
@@ -1188,11 +1180,10 @@ def run_pipeline_incremental(
         # Union of a pruned-join subtree trips Catalyst's constraint
         # rewrite (key-not-found on the pruned attribute) — two flat
         # LogicalRDD legs sidestep both
-        kept = (
+        kept = pin(
             led_df.where(F.col("bucket").isin(touched_list))
             .join(F.broadcast(affected_grps), "grp", "left_anti")
             .select("grp", *QUAD_COLUMNS)
-            .localCheckpoint(eager=True)
         )
         delta = kept.unionByName(
             fresh_led.select("grp", *QUAD_COLUMNS)

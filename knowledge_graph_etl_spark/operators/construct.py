@@ -9,6 +9,10 @@ feed templates (reference sparql/ldap_mapping_org.sparql:21→42).
 The union of all template triples is deduplicated (triple-store set
 semantics) and routed to the target graph (``WITH <g>`` /
 ``GRAPH <g> {}`` — both compile to a constant ``g`` column, op 22).
+
+All template triples come from ONE explode over the bindings, so the
+bindings are read once and :func:`construct` checkpoints nothing; a
+caller whose bindings have other consumers pins them (:mod:`..ckpt`).
 """
 
 from __future__ import annotations
@@ -60,7 +64,6 @@ def construct(
     bindings: DataFrame,
     template: list[tuple],
     target_graph: "str | None | Var",
-    materialize: bool | None = None,
     carry: list[str] | None = None,
 ) -> DataFrame:
     """Instantiate ``template`` (list of (s, p, o) with Var/Term entries)
@@ -73,15 +76,10 @@ def construct(
     binding, rows with it unbound (or bound to a literal — a graph name
     must be an IRI) are skipped like any other unbound template term.
 
-    The template union makes one consumer of ``bindings`` PER template
-    triple, and the store's set-dedup anti-join adds another — so a
-    multi-triple template re-executes the whole WHERE join tree per triple
-    (17× for a 16-triple reference template like
-    sparql/tl_companies_mapping_org.sparql:13-32) unless the bindings are
-    materialized first. ``materialize=None`` (default) checkpoints whenever
-    the template has more than one triple; pass ``False`` to opt out (e.g.
-    bindings already checkpointed by the SPARQL-frontend compiler) or
-    ``True`` to force.
+    ``bindings`` is read exactly once, however many triples the template
+    has (one explode, see below), so nothing here is checkpointed: a
+    caller whose bindings feed other consumers too pins them itself
+    (:mod:`..ckpt`), as the update compiler does.
 
     ``carry``: binding columns to project VERBATIM onto every output quad
     row — the provenance hook (incremental pipeline maintenance carries
@@ -89,10 +87,6 @@ def construct(
     quad). Carried columns join the dedup key, so the same quad derived
     under two different carried values keeps both rows — exactly the
     multiset a reference-counted delete needs."""
-    if materialize is None:
-        materialize = len(template) > 1
-    if materialize and not bindings.isStreaming:
-        bindings = bindings.localCheckpoint(eager=True)
     cols = set(bindings.columns)
     if isinstance(target_graph, Var):
         g_col = F.col(target_graph.name)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import pin
 from ..terms import LITERAL, Term
 from .bgp import Var, _companion
 
@@ -128,15 +129,15 @@ def _closure(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     frontier ∘ base scheme would cap at max_iter hops and crash on a
     deep chain). Terminates when no new pairs appear; one count action
     per round, plans severed by lazy checkpoints."""
-    base = pairs.distinct().localCheckpoint(eager=True)
+    base = pin(pairs.distinct())
     reach = base
     frontier = base
     for _ in range(max_iter):
         stepped = _pair_join(frontier, reach).distinct()
-        new = _minus(stepped, reach).localCheckpoint(eager=False)
+        new = pin(_minus(stepped, reach), lazy=True)
         if new.count() == 0:
             return reach
-        reach = reach.unionByName(new).localCheckpoint(eager=False)
+        reach = pin(reach.unionByName(new), lazy=True)
         frontier = new
     raise RuntimeError(f"path closure did not converge within {max_iter} rounds")
 
@@ -150,15 +151,15 @@ def _closure_from(
     which is the plan a constant-endpoint closure wants at scale (the
     all-pairs closure would compute full-graph reachability and then
     filter). Rounds = eccentricity of the source set."""
-    base = pairs.distinct().localCheckpoint(eager=True)
-    reach = seed.distinct().localCheckpoint(eager=True)
+    base = pin(pairs.distinct())
+    reach = pin(seed.distinct())
     frontier = reach
     for _ in range(max_iter):
         stepped = _pair_join(frontier, base).distinct()
-        new = _minus(stepped, reach).localCheckpoint(eager=False)
+        new = pin(_minus(stepped, reach), lazy=True)
         if new.count() == 0:
             return reach
-        reach = reach.unionByName(new).localCheckpoint(eager=False)
+        reach = pin(reach.unionByName(new), lazy=True)
         frontier = new
     raise RuntimeError(f"path closure did not converge within {max_iter} rounds")
 

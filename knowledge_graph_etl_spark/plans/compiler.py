@@ -24,12 +24,10 @@ of the quads table whose g/p/o constants reach the parquet reader.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import Checkpoints, pin
 from ..functions import (
     TermExpr,
     encode_for_uri,
@@ -101,62 +99,21 @@ def _pattern_vars(tp: TriplePattern) -> set[str]:
     return {t.name for t in (tp.s, tp.p, tp.o) if isinstance(t, VarT)}
 
 
-#: per-predicate row counts active during a compile (cost-based join
-#: ordering) — set via predicate_stats_context by Engine(stats=True);
-#: unset = structural heuristics only (behavior identical to pre-stats).
-#: threading.local: concurrent compiles from multiple driver threads (a
-#: normal Spark pattern — e.g. two Engines submitting in parallel) each
-#: carry their own stats instead of clobbering a process global.
-_ACTIVE = threading.local()
-
-
-def _active_stats() -> dict[str, int] | None:
-    return getattr(_ACTIVE, "stats", None)
-
-
-@contextmanager
-def predicate_stats_context(stats: dict[str, int] | None):
-    """Activate per-predicate row counts for every BGP compiled inside the
-    block ON THIS THREAD: same-structural-class patterns then seed on
-    ascending predicate cardinality (the one statistic a quad store can
-    keep cheaply — its 'table sizes', since predicates play the role
-    tables do in a relational catalog). Join RESULTS are
-    order-independent; only the plan changes."""
-    prev = _active_stats()
-    _ACTIVE.stats = stats
-    try:
-        yield
-    finally:
-        _ACTIVE.stats = prev
-
-
-def _pred_count(tp: TriplePattern) -> float:
-    """Secondary selectivity key: the pattern's predicate cardinality
-    under the active stats (variable predicate = the whole store = +inf);
-    0.0 when no stats are active, preserving the original stable order."""
-    stats = _active_stats()
-    if stats is None:
-        return 0.0
-    if isinstance(tp.p, IriT):
-        return float(stats.get(tp.p.value, 0))
-    return float("inf")
-
-
 def _order_patterns(patterns: list[TriplePattern]) -> list[TriplePattern]:
     """Greedy connectivity order seeded on selectivity (see module doc)."""
     remaining = list(patterns)
     ordered: list[TriplePattern] = []
     bound: set[str] = set()
 
-    def selectivity(tp: TriplePattern) -> tuple:
+    def selectivity(tp: TriplePattern) -> int:
         # lower = more selective: constant object beats constant-subject
         # beats all-var (predicates are almost always constant here);
-        # within a class, rarer predicates first when stats are active
+        # ties keep the input order (min is stable)
         if not isinstance(tp.o, VarT):
-            return (0, _pred_count(tp))
+            return 0
         if not isinstance(tp.s, VarT):
-            return (1, _pred_count(tp))
-        return (2, _pred_count(tp))
+            return 1
+        return 2
 
     while remaining:
         if not ordered:
@@ -689,18 +646,12 @@ def _star_units(run: list[TriplePattern]):
             star_vars = {subj} | {
                 tp.o.name for tp in keep if isinstance(tp.o, VarT)
             }
-            sel = (
-                0 if any(not isinstance(tp.o, VarT) for tp in keep) else 1,
-                min(_pred_count(tp) for tp in keep),
-            )
+            sel = 0 if any(not isinstance(tp.o, VarT) for tp in keep) else 1
             units.append(("star", subj, keep, star_vars, sel))
         else:
             singles.extend(keep)
     for tp in _order_patterns(singles):
-        sel = (
-            0 if not isinstance(tp.o, VarT) else (1 if not isinstance(tp.s, VarT) else 2),
-            _pred_count(tp),
-        )
+        sel = 0 if not isinstance(tp.o, VarT) else (1 if not isinstance(tp.s, VarT) else 2)
         units.append(("single", None, [tp], _pattern_vars(tp), sel))
     # greedy connectivity over units, seeded on selectivity (same policy
     # as _order_patterns, lifted to star granularity)
@@ -1242,26 +1193,18 @@ def compile_insert_where(
     store matches. Partition pruning on ``g`` applies in every case
     (SURVEY.md §2 ops 22-23).
 
-    ``materialize=False`` (used by ``Engine.plan``) skips the eager
-    checkpoint so compiling stays side-effect-free.
+    ``materialize=True`` pins the WHERE bindings: the deep self-join tree
+    is cut from the lineage, so the insert's anti-join and write plan a
+    flat leaf with exact sizes (and ``Engine.plan`` callers that union
+    many updates stay analysis-cheap). The consumer of the returned plan
+    owns the pin (:mod:`..ckpt`; see ``execute_update``).
+    ``materialize=False`` (used by ``Engine.plan`` for EXPLAIN) skips the
+    eager checkpoint so compiling stays side-effect-free.
 
     ``carry``: WHERE-variable names projected verbatim onto every output
     quad row (provenance carry — see :func:`..operators.construct
     .construct`); raises if a name is not bound by the WHERE clause."""
-    if node.using:
-        dataset = store.dataset(node.using)
-    elif node.target_graph is not None:
-        dataset = store.graph(node.target_graph)
-    else:
-        dataset = store.quads()
-    named = store.dataset(node.using_named) if node.using_named else None
-    bindings = compile_group(node.where, dataset, named)
-    # Materialize the WHERE result once: the template union instantiates
-    # one projection per template triple (up to 16, e.g. reference
-    # sparql/tl_companies_mapping_org.sparql:13-32) and the store's
-    # set-dedup anti-join adds another consumer — without this the deep
-    # self-join subtree re-executes per consumer (17× for a 16-triple
-    # template). Also cuts lineage and gives exact stats downstream.
+    bindings = _update_bindings(node, store)
     if carry:
         companions = ("__type", "__dt", "__lang")
         missing = [c for c in carry if c not in bindings.columns]
@@ -1273,12 +1216,25 @@ def compile_insert_where(
                 f"carry variables not bound by WHERE: {missing} (bound: {bound})"
             )
     if materialize:
-        bindings = bindings.localCheckpoint(eager=True)
-
+        bindings = pin(bindings)
     bindings = _mint_template_bnodes(bindings, node.template)
     return _template_quads(
         bindings, node.template, node.target_graph, carry=carry
     )
+
+
+def _update_bindings(node, store) -> DataFrame:
+    """The WHERE solutions of an INSERT/DELETE…WHERE update, matched
+    against its ``USING`` graphs; with no USING, ``WITH <g>`` restricts
+    matching to g, and with neither the whole store matches."""
+    if node.using:
+        dataset = store.dataset(node.using)
+    elif node.target_graph is not None:
+        dataset = store.graph(node.target_graph)
+    else:
+        dataset = store.quads()
+    named = store.dataset(node.using_named) if node.using_named else None
+    return compile_group(node.where, dataset, named)
 
 
 def _mint_template_bnodes(bindings: DataFrame, template: list) -> DataFrame:
@@ -1341,7 +1297,6 @@ def _template_quads(
             bindings,
             triples,
             target_graph=Var(g.name) if isinstance(g, VarT) else g,
-            materialize=False,
             carry=carry,
         )
         for g, triples in by_graph.items()
@@ -1352,20 +1307,18 @@ def _template_quads(
     return result
 
 
-def compile_construct(
-    node: ConstructQuery, store, materialize: bool = True
-) -> DataFrame:
+def compile_construct(node: ConstructQuery, store) -> DataFrame:
     """Read-side CONSTRUCT → quads DataFrame: the INSERT template machinery
     with the triples RETURNED instead of inserted. ``g`` is NULL for
     default-graph template triples (a CONSTRUCT result is a graph, not a
     dataset) and the GRAPH IRI for ``GRAPH <g> { ... }`` template blocks.
     Unbound template variables skip the triple (construct()'s unbound-skip),
-    fresh template bnodes mint per solution row exactly as in updates."""
+    fresh template bnodes mint per solution row exactly as in updates.
+    The bindings are pinned; the returned plan reads them, so its consumer
+    owns the pin (:mod:`..ckpt`)."""
     dataset = store.dataset(node.from_graphs) if node.from_graphs else store.quads()
     named = store.dataset(node.from_named) if node.from_named else None
-    bindings = compile_group(node.where, dataset, named)
-    if materialize:
-        bindings = bindings.localCheckpoint(eager=True)
+    bindings = pin(compile_group(node.where, dataset, named))
     bindings = _mint_template_bnodes(bindings, node.template)
     by_graph: dict[object, list] = {}
     for g, tp in node.template:
@@ -1377,7 +1330,6 @@ def compile_construct(
             bindings,
             triples,
             target_graph=Var(g.name) if isinstance(g, VarT) else g,
-            materialize=False,
         )
         for g, triples in by_graph.items()
     ]
@@ -1388,24 +1340,16 @@ def compile_construct(
 
 
 def compile_delete_insert(
-    node: DeleteWhere, store, materialize: bool = True
+    node: DeleteWhere, store
 ) -> tuple[DataFrame, DataFrame | None]:
     """DELETE [INSERT] WHERE → (quads-to-delete, quads-to-insert-or-None).
 
     Both templates instantiate against the SAME pre-modification WHERE
     solutions (SPARQL 1.1 Update Modify semantics) — the bindings are
-    checkpointed before either write executes, so the delete cannot
-    change what the insert template sees."""
-    if node.using:
-        dataset = store.dataset(node.using)
-    elif node.target_graph is not None:
-        dataset = store.graph(node.target_graph)
-    else:
-        dataset = store.quads()
-    named = store.dataset(node.using_named) if node.using_named else None
-    bindings = compile_group(node.where, dataset, named)
-    if materialize:
-        bindings = bindings.localCheckpoint(eager=True)
+    pinned before either write executes, so the delete cannot change
+    what the insert template sees. The consumer owns the pin (see
+    ``execute_update``)."""
+    bindings = pin(_update_bindings(node, store))
     del_df = _template_quads(bindings, node.delete_template, node.target_graph)
     ins_df = (
         _template_quads(bindings, node.insert_template, node.target_graph)
@@ -1826,43 +1770,48 @@ def execute_update(node, store) -> None:
             target_graphs=sorted({r[0] for r in rows}),
         )
         return
-    if isinstance(node, DeleteWhere):
-        del_df, ins_df = compile_delete_insert(node, store)
-        # SPARQL Modify order: delete first, then insert, both instantiated
-        # from the pre-modification bindings (checkpointed above)
-        store.delete(del_df, target_graphs=_delete_graphs(node))
-        if ins_df is not None:
-            targets = {
-                g or node.target_graph for g, _ in node.insert_template
-            }
-            if None in targets:
-                raise ValueError(
-                    "template triple has no target graph (no WITH/GRAPH)"
-                )
-            dynamic = any(isinstance(t, VarT) for t in targets)
-            store.insert(
-                ins_df,
-                target_graphs=None if dynamic else sorted(targets),
-                # a GRAPH ?var construct may overlap a constant-graph one;
-                # only the all-constant case is provably duplicate-free
-                batch_distinct=not dynamic,
-            )
-        return
-    if isinstance(node, InsertWhere):
-        targets = {g or node.target_graph for g, _ in node.template}
-        if None in targets:
-            raise ValueError("template triple has no target graph (no WITH/GRAPH)")
-        dynamic = any(isinstance(t, VarT) for t in targets)
-        graphs = None if dynamic else sorted(targets)
-        # batch_distinct: each construct() output is deduped internally and
-        # the per-graph unions are disjoint on g → no second dedup shuffle.
-        # With a GRAPH ?var block the targets are data-dependent: the
-        # anti-join prunes against the whole store and the batch gets a
-        # full dedup (a variable-graph construct may overlap a constant one)
-        store.insert(
-            compile_insert_where(node, store),
-            target_graphs=graphs,
-            batch_distinct=not dynamic,
-        )
+    if isinstance(node, (DeleteWhere, InsertWhere)):
+        # the update owns its WHERE pin and releases it once the writes
+        # have returned: a parquet store's files never read it again. An
+        # in-memory store's cached pieces keep it in their lineage, and a
+        # read after a DELETE/INSERT recomputes through it, so there it
+        # lives as long as the store's data.
+        ck = Checkpoints()
+        try:
+            _modify(node, store, ck)
+        finally:
+            if store.path:
+                ck.release()
         return
     raise TypeError(f"unexpected update node {node!r}")
+
+
+def _modify(node, store, ck: Checkpoints) -> None:
+    """Run an INSERT…WHERE or DELETE [INSERT] WHERE; ``ck`` takes over the
+    pinned bindings the compiled quads read."""
+    if isinstance(node, DeleteWhere):
+        del_df, ins_df = compile_delete_insert(node, store)
+        ck.own(del_df)
+        # SPARQL Modify order: delete first, then insert, both instantiated
+        # from the pre-modification bindings (pinned above)
+        store.delete(del_df, target_graphs=_delete_graphs(node))
+        template = node.insert_template
+    else:
+        ins_df = ck.own(compile_insert_where(node, store))
+        template = node.template
+    if ins_df is None:
+        return
+    targets = {g or node.target_graph for g, _ in template}
+    if None in targets:
+        raise ValueError("template triple has no target graph (no WITH/GRAPH)")
+    dynamic = any(isinstance(t, VarT) for t in targets)
+    # batch_distinct: each construct() output is deduped internally and
+    # the per-graph unions are disjoint on g → no second dedup shuffle.
+    # With a GRAPH ?var block the targets are data-dependent: the
+    # anti-join prunes against the whole store and the batch gets a
+    # full dedup (a variable-graph construct may overlap a constant one)
+    store.insert(
+        ins_df,
+        target_graphs=None if dynamic else sorted(targets),
+        batch_distinct=not dynamic,
+    )

@@ -27,6 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ckpt import pin
 from .terms import QUAD_COLUMNS, QUAD_SCHEMA
 
 # Spark writes Hive-style escaped partition directories (see Spark's
@@ -86,9 +87,6 @@ class GraphStore:
         # clear/drop/close can unpersist them (CacheManager holds JVM-side
         # references; dropping the Python objects frees nothing)
         self._mem_pieces: list[DataFrame] = []
-        # per-predicate row counts (the catalog statistic cost-based BGP
-        # ordering consumes) — computed lazily, invalidated on mutation
-        self._pred_stats: dict[str, int] | None = None
         if path:
             os.makedirs(path, exist_ok=True)
             # finish (or roll back) any compaction a previous process died in
@@ -109,24 +107,6 @@ class GraphStore:
         if self._mem is None:
             return self.spark.createDataFrame([], QUAD_SCHEMA)
         return self._mem
-
-    def predicate_stats(self, refresh: bool = False) -> dict[str, int]:
-        """Per-predicate row counts — the quad-store analog of relational
-        table-size statistics (predicates are the 'tables' a pattern
-        scans), consumed by the compiler's cost-based BGP join ordering
-        (``Engine(stats=True)``). One count-aggregate job; the result is
-        bounded by the predicate vocabulary (thousands, not rows) so a
-        driver-side dict is the right representation. Cached until the
-        next mutation (insert/delete/clear/drop)."""
-        if self._pred_stats is None or refresh:
-            self._pred_stats = {
-                r["p"]: r["c"]
-                for r in self.quads()
-                .groupBy("p")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            }
-        return self._pred_stats
 
     def graph(self, g: str) -> DataFrame:
         return self.quads().where(F.col("g") == g)
@@ -162,7 +142,6 @@ class GraphStore:
         in-batch ``dropDuplicates`` shuffle. Set semantics are unchanged:
         the guarantee is the caller's, exactly like the reference trusting
         its per-record INSERT DATA batches to be duplicate-free."""
-        self._pred_stats = None
         batch = self._prepare_batch(
             new_quads, dedup_against_store, target_graphs, batch_distinct
         )
@@ -314,7 +293,6 @@ class GraphStore:
         Spark job. A commit that died earlier in this process is first
         finished or rolled back, like on open; a batch directory left by
         a crash is deleted then like any uncommitted tmp."""
-        self._pred_stats = None
         if not self.path:
             if self._mem is None and rows is None:
                 return
@@ -447,8 +425,7 @@ class GraphStore:
 
     def checkpoint_mem(self) -> None:
         """Sever an in-memory store's plan tree: replace the lazy union of
-        cached insert pieces with ONE eagerly ``localCheckpoint``-ed
-        DataFrame, so every later pattern scan is a flat ``LogicalRDD``
+        cached insert pieces with ONE eagerly checkpointed DataFrame, so every later pattern scan is a flat ``LogicalRDD``
         leaf instead of re-carrying the full load lineage.
 
         Why this exists: Catalyst ANALYSIS cost of a BGP self-join is
@@ -459,12 +436,12 @@ class GraphStore:
         driver-side analysis PER UPDATE (r10 profile) — 3-10× the actual
         execution. One checkpoint after loading collapses that to
         sub-second. No-op for file-backed stores (parquet leaves are
-        already flat) and empty stores. The caller owns the released
-        blocks like any other checkpoint (harnesses sweep
+        already flat) and empty stores. The checkpoint lives as long as
+        the store's data (an unowned :func:`.ckpt.pin`; harnesses sweep
         getPersistentRDDs)."""
         if self._mem is None:
             return
-        self._replace_mem(self._mem.localCheckpoint(eager=True))
+        self._replace_mem(pin(self._mem))
 
     def optimize(
         self,

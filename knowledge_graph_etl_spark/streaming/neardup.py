@@ -139,11 +139,9 @@ def flag_neardups(
                 f"bands ({bands}) must divide num_hashes ({num_hashes})"
             )
         # same formulas as _banded_signatures (shared with the streaming
-        # path), but the (id, sig) table is localCheckpoint-materialized
-        # so every consumer reads it instead of recomputing it
-        sig = _signature_table(
-            docs, text_col, id_col, num_hashes, hash_fn, True
-        )
+        # path), but the (id, sig) table is checkpointed so every
+        # consumer reads it instead of recomputing it
+        sig = _signature_table(docs, text_col, id_col, num_hashes, hash_fn)
         banded = _band_table(sig, num_hashes, bands, hash_fn)
         first = banded.groupBy("band", "bucket").agg(
             F.min("id").alias("dup_of")

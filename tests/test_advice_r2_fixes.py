@@ -8,9 +8,7 @@
    in the same scan.
 3. ``read_postgres_json(key_col=...)`` keeps byte-identical duplicate
    rows distinct when the source has a primary key.
-4. ``minhash_lsh_pairs(materialize=False)`` builds the plan without
-   running any Spark job (no eager localCheckpoint).
-5. In-memory store consolidates its cached insert pieces past the
+4. In-memory store consolidates its cached insert pieces past the
    threshold instead of growing the union plan without bound.
 """
 
@@ -19,7 +17,6 @@ import json
 import pytest
 
 from knowledge_graph_etl_spark.engine import Engine
-from knowledge_graph_etl_spark.extensions.dedup import minhash_lsh_pairs
 from knowledge_graph_etl_spark.sources.jsonsrc import read_postgres_json
 from knowledge_graph_etl_spark.sources.ntriples import read_ntriples
 from knowledge_graph_etl_spark.store import GraphStore
@@ -113,32 +110,7 @@ def test_jdbc_key_col_keeps_duplicates_distinct(spark):
     assert len({r["doc_id"] for r in keyless.collect()}) == 1
 
 
-# -- 4. minhash plan construction stays lazy ---------------------------------
-
-
-def test_minhash_materialize_false_runs_no_job(spark, monkeypatch):
-    docs = spark.createDataFrame(
-        [("a", "one two three"), ("b", "one two three"), ("c", "zzz yyy xxx")],
-        "doc_id string, text string",
-    )
-    calls = []
-    cls = type(docs)  # the concrete (classic) DataFrame class
-    orig = cls.localCheckpoint
-
-    def spy(self, eager=True):
-        calls.append(eager)
-        return orig(self, eager)
-
-    monkeypatch.setattr(cls, "localCheckpoint", spy)
-    lazy = minhash_lsh_pairs(docs, num_hashes=8, bands=4, materialize=False)
-    assert calls == []  # plan built, no job ran
-    eager = minhash_lsh_pairs(docs, num_hashes=8, bands=4, materialize=True)
-    assert calls == [True]
-    # both modes compute the same pairs
-    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))
-
-
-# -- 5. in-memory store piece consolidation ----------------------------------
+# -- 4. in-memory store piece consolidation ----------------------------------
 
 
 def test_mem_store_consolidates_pieces(spark):

@@ -67,12 +67,9 @@ def test_insert_dedup_scan_prunes_to_target_graphs(pstore, spark):
     batched-insert shape) makes g opaque, and then the explicit hint is
     the ONLY thing standing between one-partition and whole-store
     scans; the no-hint control documents exactly that."""
-    from knowledge_graph_etl_spark.extensions.ckpt import (
-        persistent_rdd_ids,
-        release_new_checkpoints,
-    )
+    from knowledge_graph_etl_spark.ckpt import Checkpoints
 
-    before = persistent_rdd_ids(spark)
+    ck = Checkpoints()
     batch = quadify(
         spark.range(5).select(
             F.col("id").alias("k"), F.lit("v").alias("c_name")
@@ -81,7 +78,8 @@ def test_insert_dedup_scan_prunes_to_target_graphs(pstore, spark):
         "urn:c:",
         "urn:g:one",
         namespace="urn:p:",
-    ).localCheckpoint(eager=True)
+    )
+    batch = ck.pin(batch)
     try:
         plan = _plan(
             pstore._prepare_batch(batch, target_graphs=["urn:g:one"])
@@ -105,7 +103,7 @@ def test_insert_dedup_scan_prunes_to_target_graphs(pstore, spark):
         # deterministic release: leaving the checkpoint to the async
         # ContextCleaner lets it unpersist mid-way through a LATER
         # test's pinned-RDD accounting window
-        release_new_checkpoints(spark, before)
+        ck.release()
 
 
 def test_pattern_scan_pushes_predicate_and_object(pstore):
@@ -619,16 +617,12 @@ def test_large_order_customers_having_drives_the_join(spark):
 
 
 def test_ks_2sample_materialize_single_source_scan(spark, tmp_path):
-    """r09 verdict item 7: lazy ks_2sample references the histogram
-    subtree three times (totals + both pair sides) so the source is
-    scanned thrice; materialize=True localCheckpoints the histogram and
-    the plan must then contain ZERO source scans (all three consumers
-    read the checkpointed RDD). Caller releases the checkpoint — the
-    accepted pinned-RDD budget."""
-    from knowledge_graph_etl_spark.extensions.ckpt import (
-        persistent_rdd_ids,
-        release_new_checkpoints,
-    )
+    """r09 verdict item 7: the histogram subtree has three consumers
+    (totals + both pair sides), so ks_2sample checkpoints the histogram
+    and its plan contains ZERO source scans (all three consumers read
+    the checkpointed RDD). The consumer takes the checkpoint over and
+    releases it — the accepted pinned-RDD budget."""
+    from knowledge_graph_etl_spark.ckpt import Checkpoints, persistent_rdd_ids
     from knowledge_graph_etl_spark.extensions.stats import ks_2sample
 
     src = str(tmp_path / "ks_src.parquet")
@@ -639,33 +633,23 @@ def test_ks_2sample_materialize_single_source_scan(spark, tmp_path):
     ).write.parquet(src)
     df = spark.read.parquet(src)
 
-    # lazy: the histogram subtree fans out to ≥3 source scans (the tree
-    # duplicates further through the pairs self-join before ReusedExchange
-    # kicks in at runtime — the point is it is NOT one)
-    lazy_plan = _plan(ks_2sample(df, "g", "v"))
-    assert lazy_plan.count("Scan parquet") >= 3, lazy_plan
-
     before = persistent_rdd_ids(spark)
-    out = ks_2sample(df, "g", "v", materialize=True)
+    ck = Checkpoints()
+    out = ck.own(ks_2sample(df, "g", "v"))
     mat_plan = _plan(out)
     assert mat_plan.count("Scan parquet") == 0, mat_plan
     assert "Scan ExistingRDD" in mat_plan, mat_plan
-    # identical results either way
-    lazy_rows = sorted(
-        (r.group_a, r.group_b, r.n_a, r.n_b, r.d_num, r.d_ppm)
-        for r in ks_2sample(df, "g", "v").collect()
-    )
-    mat_rows = sorted(
+    # b is a shifted by 5 of 20 values: D = 5/20, d_num = 5·20
+    assert [
         (r.group_a, r.group_b, r.n_a, r.n_b, r.d_num, r.d_ppm)
         for r in out.collect()
-    )
-    assert lazy_rows == mat_rows
+    ] == [("a", "b", 20, 20, 100, 250000)]
     # caller-side release restores the session's pinned-RDD budget: no
     # NEW ids survive. Subset (not equality): Spark's async
     # ContextCleaner may concurrently unpersist UNRELATED checkpoints
     # whose DataFrames other tests dropped — ids can legitimately leave
     # `before` mid-test, but nothing this test pinned may remain
-    release_new_checkpoints(spark, before)
+    ck.release()
     assert persistent_rdd_ids(spark) <= before
 
 
@@ -675,9 +659,11 @@ def test_stats_family_plan_shapes(spark, tmp_path):
     join is broadcast (zero SortMergeJoin — nothing corpus-sized ever
     shuffles for a join), zero CartesianProduct (the cross joins are
     broadcast-scalar or bounded-grid), and the corpus reduction is a
-    map-side-combinable partial aggregate. Scan-count bounds pin the
-    documented pass structure (selectivity_estimate's 'three passes';
-    cramers_v's contingency-cell consumers)."""
+    map-side-combinable partial aggregate. ks_2sample checkpoints its
+    reduction, so its shapes are read from the plans of the queries run
+    while building the result plus the returned plan. Scan-count bounds
+    pin the documented pass structure (selectivity_estimate's 'three
+    passes'; cramers_v's contingency-cell consumers)."""
     from knowledge_graph_etl_spark.extensions.stats import (
         cramers_v,
         ks_2sample,
@@ -692,13 +678,31 @@ def test_stats_family_plan_shapes(spark, tmp_path):
     ).write.parquet(src)
     d = spark.read.parquet(src)
 
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id() -> int:
+        # the store keeps only the newest spark.sql.ui.retainedExecutions,
+        # so count-based offsets drift in a long session; ids do not
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    def with_executed(build) -> str:
+        """The returned plan plus the physical plans of every query run
+        while building it (the checkpoint jobs)."""
+        first = last_execution_id() + 1
+        out = _plan(build())
+        ran = [store.execution(i) for i in range(first, last_execution_id() + 1)]
+        return "\n".join(
+            [out] + [e.get().physicalPlanDescription() for e in ran if e.isDefined()]
+        )
+
     plans = {
         "selectivity": _plan(selectivity_estimate(d, "v", [(1, 50), (0, 96)])),
         "psi": _plan(
             psi_report(d.where("k % 2 = 0"), d.where("k % 2 = 1"), "v")
         ),
         "cramers": _plan(cramers_v(d, "a", "b")),
-        "ks": _plan(ks_2sample(d, "a", "v")),
+        "ks": with_executed(lambda: ks_2sample(d, "a", "v")),
     }
     for name, p in plans.items():
         assert "SortMergeJoin" not in p, (name, p)
@@ -768,36 +772,6 @@ def test_tpch_r10_shapes_broadcast_and_pushdown(spark):
     assert re.search(
         r"BroadcastExchange \(\d+\)[\s\S]{0,120}TakeOrderedAndProject", q10
     ), q10
-
-
-def test_psi_report_materialize_collapses_scans(spark, tmp_path):
-    """psi_report(materialize=True) checkpoints the one-row edge vector
-    and the bin-sized joined counts, collapsing the lazy fan-out to
-    exactly three source passes total; results identical."""
-    import re
-
-    from knowledge_graph_etl_spark.extensions.stats import psi_report
-
-    src = str(tmp_path / "psi_src.parquet")
-    spark.createDataFrame(
-        [(i, float(i % 37)) for i in range(300)], "k long, v double"
-    ).write.parquet(src)
-    d = spark.read.parquet(src)
-    ref, cur = d.where("k % 2 = 0"), d.where("k % 2 = 1")
-
-    lazy = psi_report(ref, cur, "v")
-    mat = psi_report(ref, cur, "v", materialize=True)
-
-    def scans(df):
-        return len(re.findall(r"\(\d+\) Scan parquet", _plan(df)))
-
-    # lazy fans out; materialized: the binning passes ran eagerly at
-    # checkpoint time, so the FINAL plan reads no source at all — the
-    # op's total cost is exactly three source passes
-    assert scans(lazy) > 3
-    assert scans(mat) == 0, _plan(mat)
-    key = lambda r: r["bin_id"]
-    assert sorted(lazy.collect(), key=key) == sorted(mat.collect(), key=key)
 
 
 def _broadcast_scan_tables(plan: str) -> set[str]:

@@ -1707,65 +1707,23 @@ def test_trailing_values_clause(spark):
         )
 
 
-# -- cost-based BGP ordering (Engine(stats=True)) -----------------------------
+# -- BGP join-order seed ---------------------------------------------------
 
 
-def test_order_patterns_uses_predicate_stats():
-    """Within the same structural class, active stats seed the join on the
-    RAREST predicate; without stats the original stable order holds."""
-    from knowledge_graph_etl_spark.plans.compiler import (
-        _order_patterns,
-        predicate_stats_context,
-    )
+def test_order_patterns_keeps_stable_order():
+    """Within the same structural class the original pattern order
+    holds (the greedy seed is stable)."""
+    from knowledge_graph_etl_spark.plans.compiler import _order_patterns
     from knowledge_graph_etl_spark.plans.parser import IriT, TriplePattern, VarT
 
     tps = [
         TriplePattern(VarT("s"), IriT("urn:p:common"), VarT("a")),
         TriplePattern(VarT("s"), IriT("urn:p:rare"), VarT("b")),
     ]
-    plain = _order_patterns(list(tps))
-    assert plain[0].p.value == "urn:p:common"  # stable: input order kept
-    with predicate_stats_context({"urn:p:common": 100000, "urn:p:rare": 3}):
-        ordered = _order_patterns(list(tps))
-    assert ordered[0].p.value == "urn:p:rare"  # rarest seeds the join
-    # variable predicate = whole store: always last among its class
-    tps2 = tps + [TriplePattern(VarT("s"), VarT("anyp"), VarT("c"))]
-    with predicate_stats_context({"urn:p:common": 10, "urn:p:rare": 3}):
-        ordered2 = _order_patterns(list(tps2))
-    assert isinstance(ordered2[-1].p, VarT)
-
-
-def test_stats_engine_same_results(spark):
-    """Join order changes results never: Engine(stats=True) returns the
-    identical solution set, and the cached stats invalidate on mutation."""
-    from knowledge_graph_etl_spark.engine import Engine
-
-    def _load(e):
-        e.store.insert_data(
-            [
-                ("urn:g:s", f"urn:s{i}", "iri", "urn:p:common", f"v{i}", "literal", None, None)
-                for i in range(50)
-            ]
-            + [
-                ("urn:g:s", "urn:s1", "iri", "urn:p:rare", "x", "literal", None, None),
-            ]
-        )
-
-    q = (
-        "SELECT ?s ?v FROM <urn:g:s> WHERE "
-        "{ ?s <urn:p:common> ?v . ?s <urn:p:rare> ?r }"
-    )
-    plain, stat = Engine(spark), Engine(spark, stats=True)
-    _load(plain)
-    _load(stat)
-    assert sorted(map(tuple, plain.select(q).collect())) == sorted(
-        map(tuple, stat.select(q).collect())
-    )
-    assert stat.store.predicate_stats()["urn:p:common"] == 50
-    stat.store.insert_data(
-        [("urn:g:s", "urn:s9", "iri", "urn:p:common", "w", "literal", None, None)]
-    )
-    assert stat.store.predicate_stats()["urn:p:common"] == 51  # invalidated
+    assert [tp.p.value for tp in _order_patterns(list(tps))] == [
+        "urn:p:common",
+        "urn:p:rare",
+    ]
 
 
 def test_engine_explain_surface(spark):

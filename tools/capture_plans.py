@@ -6,8 +6,10 @@ Usage: python tools/capture_plans.py <tag> <suffix> q1,q2,...
    e.g. python tools/capture_plans.py r13 before doc_minhash_cluster_dedup
 
 Plans are captured at the bench scale factor ($SPARK_GRAFT_SF_DIR,
-default sf0.1) with the exact bench session config, so Exchange counts /
-join strategies match what the bench actually executes."""
+default sf0.1) in the bench's own session (``bench.session()``:
+local[$SPARK_GRAFT_CPUS], the same shuffle partitions, driver memory and
+confs), so Exchange counts / join strategies match what the bench
+actually executes."""
 import os
 import sys
 
@@ -17,19 +19,9 @@ tag, suffix = sys.argv[1], sys.argv[2]
 names = sys.argv[3].split(",")
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-from pyspark.sql import SparkSession
+import bench
 
-spark = (
-    SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = bench.session()
 
 import __spark_entry__ as entrymod
 

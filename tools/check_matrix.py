@@ -1,8 +1,11 @@
 """Consistency check: every queries()/bench_only_queries() entry must be
 referenced in OPERATORS.md, every oracle_sql() key must exist in
-queries() (and vice versa), and every entry named in bench.py's
+queries() (and vice versa), every entry named in bench.py's
 _SETUP_DEPENDENTS must be registered (a renamed entry would otherwise
-lose its untimed setup). Run in CI-style before closing a round:
+lose its untimed setup), and no code in the package or in
+__spark_entry__.py may call ``.localCheckpoint(`` outside
+knowledge_graph_etl_spark/ckpt.py (the one owner of checkpoints). Run in
+CI-style before closing a round:
 
     python tools/check_matrix.py
 """
@@ -10,19 +13,38 @@ lose its untimed setup). Run in CI-style before closing a round:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def raw_checkpoints() -> list[str]:
+    """``path:line`` of every ``.localCheckpoint(`` outside ckpt.py."""
+    pkg = os.path.join(ROOT, "knowledge_graph_etl_spark")
+    files = [os.path.join(ROOT, "__spark_entry__.py")] + [
+        os.path.join(d, f)
+        for d, _, names in os.walk(pkg)
+        for f in names
+        if f.endswith(".py")
+    ]
+    hits = []
+    for path in sorted(files):
+        if path == os.path.join(pkg, "ckpt.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            for i, line in enumerate(fh, 1):
+                if re.search(r"\.localCheckpoint\(", line):
+                    hits.append(f"{os.path.relpath(path, ROOT)}:{i}")
+    return hits
 
 
 def main() -> int:
     import __spark_entry__ as m
     from bench import _SETUP_DEPENDENTS
 
-    text = open(
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md"),
-        encoding="utf-8",
-    ).read()
+    text = open(os.path.join(ROOT, "OPERATORS.md"), encoding="utf-8").read()
     q = m.queries()
     o = m.oracle_sql()
     b = m.bench_only_queries()
@@ -45,6 +67,8 @@ def main() -> int:
     overlap = set(q) & set(b)
     if overlap:
         problems.append(f"entries in BOTH queries() and bench_only_queries(): {sorted(overlap)}")
+    for hit in raw_checkpoints():
+        problems.append(f"raw .localCheckpoint( outside ckpt.py (use ckpt.pin): {hit}")
     if problems:
         print("\n".join(problems))
         return 1
