@@ -8,14 +8,17 @@ becomes static partition pruning (SURVEY.md §4.2).
 Set semantics are a hard correctness requirement (SURVEY.md §1.3): a triple
 store deduplicates, so ``insert`` drops duplicates within the batch AND
 against the already-stored target graphs via a left-anti join that only scans
-the affected partitions.
+the affected partitions (a parquet store skips the join when none of them is
+stored).
 
 Scale posture: partition by ``g`` (few, large graphs → each graph is a
 directory of many files); only ``insert`` appends files. Every mutation that
 replaces graphs — delete, apply_delta, CLEAR/DROP, COPY/MOVE and
 ``optimize``'s compaction — goes through one copy-on-write commit
 (:meth:`GraphStore._commit_generation`), so a crash leaves each graph at its
-old or its new generation. No driver-side collects anywhere.
+old or its new generation. No driver-side collects, except two: ``delete``
+without ``target_graphs`` collects the batch's distinct graphs, and the
+in-memory store's ``list_graphs`` collects the stored ones.
 """
 
 from __future__ import annotations
@@ -135,6 +138,8 @@ class GraphStore:
         partitions — without it the join key ``g`` is only bound at runtime,
         so the existing-side scan covers the whole store (at 100 TB that is
         the difference between reading one graph and reading all of them).
+        A parquet store whose listing holds none of ``target_graphs``
+        skips the anti-join: it could remove nothing.
 
         ``batch_distinct``: caller guarantees the batch already has no
         duplicate quads (true for ``quadify``-style staging loads — one
@@ -180,10 +185,17 @@ class GraphStore:
         :meth:`insert` so the write path's scale promise — with
         ``target_graphs`` the existing-side scan covers ONLY those
         graph partitions — is pinned by physical-plan evidence
-        (tests/test_plan_evidence.py) rather than docstring alone."""
+        (tests/test_plan_evidence.py) rather than docstring alone. Into a
+        parquet store that holds none of ``target_graphs`` the batch
+        plans no join (read from the directory listing, no Spark job)."""
         batch = new_quads.select(*QUAD_COLUMNS)
         if not batch_distinct:
             batch = batch.dropDuplicates(QUAD_COLUMNS)
+        if self.path and target_graphs is not None:
+            # an anti-join against graphs that are not stored removes
+            # nothing; the directory listing says which are, with no job
+            stored = self.list_graphs()
+            dedup_against_store &= any(g in stored for g in target_graphs)
         if dedup_against_store:
             existing = self.quads()
             if target_graphs is not None:
@@ -205,9 +217,12 @@ class GraphStore:
         tuples, or full 8-tuples with leading g when graph is None."""
         if graph is not None:
             rows = [(graph, *r) for r in rows]
+        # the rows are constants: drop their duplicates here, not in a shuffle
+        rows = list(dict.fromkeys(map(tuple, rows)))
         self.insert(
             self.spark.createDataFrame(rows, QUAD_SCHEMA),
             target_graphs=sorted({r[0] for r in rows}),
+            batch_distinct=True,
         )
 
     def delete(
@@ -278,15 +293,17 @@ class GraphStore:
     def _rewrite(self, targets: list[str], rows: DataFrame | None) -> None:
         """Each graph in ``targets`` becomes exactly its rows in ``rows``
         (``None``: no rows; ``rows`` holds no other graph). Every mutation
-        that replaces graphs is a caller of this one method.
+        that replaces graphs is a caller of this one method: ``delete``
+        and ``apply_delta``, CLEAR/DROP, COPY/MOVE and ``optimize``.
 
         In memory: the other graphs plus ``rows`` are cached as the one
         piece that replaces the store.
 
         Parquet: ``rows`` is written in ONE ``partitionBy("g")`` job into
         a batch directory ``_compact_tmp/delta=<uuid>``. Every read of
-        the store that ``rows`` makes finishes inside that job, before
-        any graph is swapped, so nothing needs pinning. Each target then
+        the store that ``rows`` makes finishes inside that write (with
+        the sampling and shuffle jobs it starts), before any graph is
+        swapped, so nothing needs pinning. Each target then
         gets its new generation through :meth:`_commit_generation`, in
         ``targets`` order; a stored target with no rows loses its
         partition and an absent one is left alone. ``rows=None`` runs no
@@ -303,7 +320,9 @@ class GraphStore:
             return
         self._recover_compactions()
         stored = set(self.list_graphs())
-        batch_dir = self._batch_dir()
+        batch_dir = os.path.join(
+            self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
+        )
         written = {}
         if rows is not None:
             rows.write.partitionBy("g").parquet(batch_dir)
@@ -316,12 +335,6 @@ class GraphStore:
             if gname in written or gname in stored:
                 self._commit_generation(gname, written.get(gname))
         shutil.rmtree(batch_dir, ignore_errors=True)
-
-    def _batch_dir(self) -> str:
-        """A fresh batch directory name under ``_compact_tmp``."""
-        return os.path.join(
-            self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
-        )
 
     def _commit_generation(self, gname: str, src: str | None) -> None:
         """Make the directory ``src`` graph ``gname``'s generation;
@@ -443,41 +456,27 @@ class GraphStore:
             return
         self._replace_mem(pin(self._mem))
 
-    def optimize(
-        self,
-        g: str | None = None,
-        target_files: int = 8,
-        cluster_by: str | None = "s",
-    ) -> None:
-        """Compact a graph's files (the reference's post-load store-optimize
-        call, load_knowledge_graph.py:669-675).
+    def optimize(self, g: str | None = None, target_files: int = 8) -> None:
+        """Compact the store's files (the reference's post-load
+        store-optimize call, load_knowledge_graph.py:669-675): every
+        stored graph (only ``g``, when given; an absent ``g`` is a no-op)
+        in one rewrite through :meth:`_rewrite`.
 
-        ``cluster_by="s"`` (default, SURVEY.md §4.3) range-partitions and
-        sorts each rewritten graph by subject, so every parquet row group
-        carries tight min/max stats on ``s`` — constant-subject patterns
-        and the build side of subject joins then prune row groups instead
-        of scanning the graph. (At 100 TB this is what makes a 7-way BGP
-        self-join read a sliver of the store per pattern.)
-
-        Each stored graph (only ``g``, when given; an absent ``g`` is a
-        no-op) is written on its own (without ``g``: the partition
-        directory name carries it) and committed through
-        :meth:`_commit_generation`."""
+        The rows are range-partitioned by ``(g, s)`` into ``target_files``
+        partitions across the whole compaction and sorted within each
+        (SURVEY.md §4.3): a graph much smaller than one partition's share
+        becomes one file, every file is sorted by subject, and the files
+        of one graph cover disjoint subject ranges. Every parquet row
+        group then carries tight min/max stats on ``s``, so
+        constant-subject patterns and the build side of subject joins
+        prune row groups instead of scanning the graph."""
         if not self.path:
             return
-        self._recover_compactions()
-        for gname in self.list_graphs():
-            if g and gname != g:
-                continue
-            df = self.graph(gname)
-            if cluster_by:
-                df = df.repartitionByRange(target_files, F.col(cluster_by))
-                df = df.sortWithinPartitions(cluster_by)
-            else:
-                df = df.repartition(target_files)
-            batch_dir = self._batch_dir()
-            df.drop("g").write.parquet(batch_dir)
-            self._commit_generation(gname, batch_dir)
+        self._recover_compactions()  # before the listing the read is planned on
+        graphs = [gname for gname in self.list_graphs() if not g or gname == g]
+        if graphs:
+            rows = self.dataset(graphs).repartitionByRange(target_files, "g", "s")
+            self._rewrite(graphs, rows.sortWithinPartitions("g", "s"))
 
     def _complete_swap(self, gname: str) -> None:
         """Step 3 of the commit protocol (see :meth:`_commit_generation`):

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 from contextlib import contextmanager
 
 import pytest
@@ -22,6 +23,26 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns the ids of the Spark jobs it started, once the listener bus
+    has delivered every job event to the status store."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted by a test")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -225,8 +225,13 @@ def _partitions(path):
         for op in MUTATIONS
         for step in ("_commit_generation", "_complete_swap")
     ]
-    # move's second commit is src's: dst is already swapped
-    + [("move_graph", step, 1) for step in ("_commit_generation", "_complete_swap")],
+    # move's second commit is src's: dst is already swapped; optimize's
+    # second is graph b's, from the batch that also fed graph a's
+    + [
+        (op, step, 1)
+        for op in ("move_graph", "optimize")
+        for step in ("_commit_generation", "_complete_swap")
+    ],
 )
 def test_every_mutation_recovers_each_graph_to_old_or_new(
     spark, tmp_path, crash, op, step, nth

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from knowledge_graph_etl_spark import BGP, GraphStore, Var
 from knowledge_graph_etl_spark.ingest import quadify
+from knowledge_graph_etl_spark.terms import QUAD_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -104,6 +105,22 @@ def test_insert_dedup_scan_prunes_to_target_graphs(pstore, spark):
         # ContextCleaner lets it unpersist mid-way through a LATER
         # test's pinned-RDD accounting window
         ck.release()
+
+
+def test_insert_into_an_absent_graph_plans_no_join(pstore, spark):
+    """The set-semantics anti-join can remove nothing from a batch whose
+    target graphs are not stored, so it is not planned; into a stored
+    target graph it stays, pruned to that graph's partition."""
+    batch = spark.createDataFrame(
+        [("urn:g:one", "urn:c:1", "iri", "urn:p:c_seg", "AUTO", "literal", None, None)],
+        QUAD_SCHEMA,
+    )
+    absent = _plan(pstore._prepare_batch(batch, target_graphs=["urn:g:absent"]))
+    assert "Join" not in absent and "Scan parquet" not in absent, absent
+    present = _plan(pstore._prepare_batch(batch, target_graphs=["urn:g:one"]))
+    assert "LeftAnti" in present, present
+    pf = [l for l in present.splitlines() if "PartitionFilters" in l]
+    assert pf and all("urn:g:one" in l for l in pf), pf
 
 
 def test_pattern_scan_pushes_predicate_and_object(pstore):

@@ -87,31 +87,78 @@ def test_list_graphs(store):
     assert store.list_graphs() == ["urn:g:a", "urn:g:b"]
 
 
-def test_optimize_clusters_by_subject(spark, tmp_path):
-    """cluster_by='s' compaction (SURVEY.md §4.3): data preserved and each
-    rewritten file covers a tight, sorted subject range."""
-    store = GraphStore(spark, str(tmp_path / "q"))
+def _subject_store(spark, path, sizes):
+    """A parquet store with ``sizes[g]`` distinct subjects in graph ``g``,
+    inserted as several appended files per graph."""
+    store = GraphStore(spark, path)
     rows = [
-        ("urn:g:a", f"urn:s:{i:03d}", "iri", "urn:p:x", f"v{i}", "literal", None, None)
-        for i in range(100)
+        (g, f"urn:s:{i:05d}", "iri", "urn:p:x", f"v{i}", "literal", None, None)
+        for g, n in sizes.items()
+        for i in range(n)
     ]
-    store.insert_data(rows)
-    before = {tuple(r) for r in store.quads().collect()}
-    store.optimize(cluster_by="s", target_files=4)
-    assert {tuple(r) for r in store.quads().collect()} == before
-    # range partitioning: per-file subject ranges must not overlap
-    import pyspark.sql.functions as F
+    store.insert(spark.createDataFrame(rows, QUAD_SCHEMA).repartition(4))
+    return store
 
-    per_file = (
-        store.quads()
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("s").alias("lo"), F.max("s").alias("hi"))
-        .collect()
-    )
-    spans = sorted((r["lo"], r["hi"]) for r in per_file)
+
+def test_optimize_clusters_by_subject(spark, tmp_path):
+    """Subject-clustered compaction (SURVEY.md §4.3): data preserved,
+    every rewritten file sorted by ``s``, the files of one graph over
+    disjoint ``s`` ranges, and a graph much smaller than one partition's
+    share of the compaction written as one file."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "q")
+    store = _subject_store(spark, path, {"urn:g:a": 100, "urn:g:small": 3})
+    before = {tuple(r) for r in store.quads().collect()}
+    store.optimize(target_files=4)
+    assert {tuple(r) for r in store.quads().collect()} == before
+    subjects = {}  # partition directory → the s column of each file
+    for name in os.listdir(path):
+        if name.startswith("g="):
+            d = os.path.join(path, name)
+            subjects[name] = [
+                pq.read_table(os.path.join(d, f)).column("s").to_pylist()
+                for f in os.listdir(d)
+                if f.endswith(".parquet")
+            ]
+    assert len(subjects.pop("g=urn%3Ag%3Asmall")) == 1
+    (files,) = subjects.values()
+    for s in files:
+        assert s == sorted(s)
+    spans = sorted((s[0], s[-1]) for s in files)
     assert len(spans) > 1
     for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-        assert hi_prev <= lo_next
+        assert hi_prev < lo_next
+
+
+def test_optimize_runs_one_compaction_whatever_the_graph_count(
+    spark, tmp_path, count_jobs
+):
+    """All graphs are compacted by one rewrite: a 3-graph store costs no
+    more Spark jobs than a 1-graph store."""
+    one = _subject_store(spark, str(tmp_path / "one"), {"urn:g:a": 300})
+    three = _subject_store(
+        spark,
+        str(tmp_path / "three"),
+        {"urn:g:a": 300, "urn:g:b": 300, "urn:g:c": 300},
+    )
+    assert len(count_jobs(three.optimize)) <= len(count_jobs(one.optimize))
+    assert three.quads().count() == 900
+
+
+def test_parquet_insert_data_runs_one_job_with_set_semantics(
+    spark, tmp_path, count_jobs
+):
+    """INSERT DATA drops the repeats of its constant rows without a
+    shuffle, and into a graph that is not stored runs no anti-join: one
+    write job. Into a stored graph, quads already there are not added
+    again."""
+    store = GraphStore(spark, str(tmp_path / "q"))
+    store.insert_data(ROWS[:1])
+    assert len(count_jobs(lambda: store.insert_data([ROWS[2], ROWS[2]]))) == 1
+    store.insert_data([ROWS[0], ROWS[1], ROWS[1]])
+    got = store.quads().select(*QUAD_COLUMNS).collect()
+    assert sorted(map(tuple, got)) == sorted(ROWS)
 
 
 def test_bucketed_table_star_join_has_no_shuffle(spark, tmp_path):
