@@ -254,18 +254,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def signed_projection_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: sign bits of dot products with fixed hyperplanes.
-    Column-expression form — exact but interpreted per element; the batch
-    operators use :func:`_all_buckets_udf` (bitwise-identical, ~10× faster)."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(v) for v in plane])
-        bit = F.when(_dot(vec, arr) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + bit * F.lit(2**i)
-    return bucket
-
-
 def _all_buckets_udf(df: DataFrame, tables: list[list[list[float]]]):
     """Arrow-batched bucketizer: one int bucket per LSH table, computed in
     numpy with the dimensions accumulated SEQUENTIALLY (``acc += v_j * p_j``

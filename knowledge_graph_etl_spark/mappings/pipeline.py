@@ -471,12 +471,6 @@ def ledger_updates(sparql_dir: str, env: str) -> list[tuple[str, str]]:
     return out
 
 
-def incremental_update_queries(env: str) -> list[str]:
-    """Back-compat listing of the maintained update texts/names (the
-    keyed form the ledger machinery uses is :func:`ledger_updates`)."""
-    return MAPPING_FILES + [add_logo_update(env), add_ldap_logo_update(env)]
-
-
 class Ledger:
     """The derivation ledger: the persisted multiset of (grp, quad) rows
     recording, for every quad of the organizations graph, WHICH

@@ -16,13 +16,22 @@ directory of many files); only ``insert`` appends files. Every mutation that
 replaces graphs — delete, apply_delta, CLEAR/DROP, COPY/MOVE and
 ``optimize``'s compaction — goes through one copy-on-write commit
 (:meth:`GraphStore._commit_generation`), so a crash leaves each graph at its
-old or its new generation. No driver-side collects, except two: ``delete``
-without ``target_graphs`` collects the batch's distinct graphs, and the
-in-memory store's ``list_graphs`` collects the stored ones.
+old or its new generation. Every public mutation first finishes or rolls
+back a commit left pending (by a crash, or by an error earlier in this
+process), before it lists a file or plans a read. No driver-side collects,
+except two: ``delete`` without ``target_graphs`` collects the batch's
+distinct graphs, and the in-memory store's ``list_graphs`` collects the
+stored ones.
+
+On-disk format: every file the store writes is zstd-compressed parquet
+(:data:`PARQUET_CODEC`, set per write, so a session's codec conf changes
+nothing here), and every file ``optimize`` writes holds its rows in
+whole-quad (``QUAD_COLUMNS``) order.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -41,6 +50,11 @@ _PART_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^\x7f') | frozenset(
     chr(c) for c in range(1, 32)
 )
 
+
+#: the codec of every parquet file the store writes, at its default level
+#: (levels 1, 3 and 9 stored the compacted benchmark store within 4% of
+#: each other; Spark's default snappy took over 1.5x the bytes)
+PARQUET_CODEC = "zstd"
 
 # a rewrite's batch directory under _compact_tmp/: '=' is always
 # escaped in a graph's tmp name, so the two can never collide
@@ -61,6 +75,21 @@ def _quad_eq_cond(left: str, right: str):
         eq = F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}"))
         cond = eq if cond is None else (cond & eq)
     return cond
+
+
+def _recovered(mutation):
+    """A public mutation of a parquet store first finishes or rolls back
+    the commits left pending in it (:meth:`GraphStore._recover_compactions`),
+    so it neither lists files that the recovery is about to replace nor
+    appends into a generation that a COMMIT marker has superseded."""
+
+    @functools.wraps(mutation)
+    def run(self, *args, **kwargs):
+        if self.path:
+            self._recover_compactions()
+        return mutation(self, *args, **kwargs)
+
+    return run
 
 
 def _unescape_partition_value(name: str) -> str:
@@ -121,6 +150,7 @@ class GraphStore:
 
     # -- write -----------------------------------------------------------
 
+    @_recovered
     def insert(
         self,
         new_quads: DataFrame,
@@ -151,7 +181,9 @@ class GraphStore:
             new_quads, dedup_against_store, target_graphs, batch_distinct
         )
         if self.path:
-            batch.write.mode("append").partitionBy("g").parquet(self.path)
+            batch.write.mode("append").partitionBy("g").parquet(
+                self.path, compression=PARQUET_CODEC
+            )
         else:
             # materialize ONLY the new batch through the cache:
             # InMemoryRelation carries REAL size stats, so downstream
@@ -210,6 +242,7 @@ class GraphStore:
             )
         return batch
 
+    @_recovered
     def insert_data(self, rows: list[tuple], graph: str | None = None) -> None:
         """SPARQL ``INSERT DATA { GRAPH <g> { ...constant triples... } }``
         (reference load_knowledge_graph.py:520-532, sparql_update.py:108-122).
@@ -225,6 +258,7 @@ class GraphStore:
             batch_distinct=True,
         )
 
+    @_recovered
     def delete(
         self,
         del_quads: DataFrame,
@@ -247,6 +281,7 @@ class GraphStore:
             batch, self.spark.createDataFrame([], QUAD_SCHEMA), target_graphs
         )
 
+    @_recovered
     def apply_delta(
         self,
         del_quads: DataFrame,
@@ -307,9 +342,9 @@ class GraphStore:
         gets its new generation through :meth:`_commit_generation`, in
         ``targets`` order; a stored target with no rows loses its
         partition and an absent one is left alone. ``rows=None`` runs no
-        Spark job. A commit that died earlier in this process is first
-        finished or rolled back, like on open; a batch directory left by
-        a crash is deleted then like any uncommitted tmp."""
+        Spark job. Its public callers have already recovered pending
+        commits (:func:`_recovered`); a batch directory left by a crash
+        is deleted then like any uncommitted tmp."""
         if not self.path:
             if self._mem is None and rows is None:
                 return
@@ -318,14 +353,13 @@ class GraphStore:
             merged.count()
             self._replace_mem(merged)
             return
-        self._recover_compactions()
         stored = set(self.list_graphs())
         batch_dir = os.path.join(
             self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
         )
         written = {}
         if rows is not None:
-            rows.write.partitionBy("g").parquet(batch_dir)
+            rows.write.partitionBy("g").parquet(batch_dir, compression=PARQUET_CODEC)
             written = {
                 _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
                 for name in os.listdir(batch_dir)
@@ -396,11 +430,13 @@ class GraphStore:
         self._mem_pieces = [sealed]
         self._mem = sealed
 
+    @_recovered
     def clear(self, g: str) -> None:
         """``CLEAR SILENT GRAPH <g>`` (reference load_knowledge_graph.py:341):
         empty the graph, no error if absent."""
         self._rewrite([g], None)
 
+    @_recovered
     def drop(self, g: str) -> None:
         """``DROP SILENT GRAPH <g>`` (reference load_knowledge_graph.py:623-665).
         Same storage action as CLEAR in a partitioned-table model; both verbs
@@ -412,6 +448,7 @@ class GraphStore:
         cols = [c for c in QUAD_COLUMNS if c != "g"]
         return self.graph(src).select(F.lit(dst).alias("g"), *cols)
 
+    @_recovered
     def add_graph(self, src: str, dst: str) -> None:
         """``ADD GRAPH <src> TO GRAPH <dst>`` (SPARQL 1.1 Update §3.2.7):
         set-union src's quads into dst; src unchanged. One partition scan +
@@ -421,6 +458,7 @@ class GraphStore:
             return
         self.insert(self._relabeled(src, dst), target_graphs=[dst], batch_distinct=True)
 
+    @_recovered
     def copy_graph(self, src: str, dst: str) -> None:
         """``COPY GRAPH <src> TO GRAPH <dst>`` (§3.2.5): dst becomes an
         exact copy of src (existing dst data removed); src unchanged."""
@@ -428,6 +466,7 @@ class GraphStore:
             return
         self._rewrite([dst], self._relabeled(src, dst))
 
+    @_recovered
     def move_graph(self, src: str, dst: str) -> None:
         """``MOVE GRAPH <src> TO GRAPH <dst>`` (§3.2.6): dst becomes src's
         quads and src is dropped, in one rewrite. dst commits before src,
@@ -456,6 +495,7 @@ class GraphStore:
             return
         self._replace_mem(pin(self._mem))
 
+    @_recovered
     def optimize(self, g: str | None = None, target_files: int = 8) -> None:
         """Compact the store's files (the reference's post-load
         store-optimize call, load_knowledge_graph.py:669-675): every
@@ -463,20 +503,23 @@ class GraphStore:
         in one rewrite through :meth:`_rewrite`.
 
         The rows are range-partitioned by ``(g, s)`` into ``target_files``
-        partitions across the whole compaction and sorted within each
-        (SURVEY.md §4.3): a graph much smaller than one partition's share
-        becomes one file, every file is sorted by subject, and the files
-        of one graph cover disjoint subject ranges. Every parquet row
-        group then carries tight min/max stats on ``s``, so
-        constant-subject patterns and the build side of subject joins
-        prune row groups instead of scanning the graph."""
+        partitions across the whole compaction (SURVEY.md §4.3): a graph
+        much smaller than one partition's share becomes one file, and the
+        files of one graph cover disjoint subject ranges. Within each
+        file the rows are in whole-quad order (``QUAD_COLUMNS``, nulls
+        first; SPO, since ``s_type`` follows from ``s``), written as zstd
+        parquet like every store file. Every parquet row group then
+        carries tight min/max stats on ``s``, so constant-subject
+        patterns and the build side of subject joins prune row groups
+        instead of scanning the graph; and the runs of equal predicates
+        and objects inside a subject compress better than a subject-only
+        sort leaves them."""
         if not self.path:
             return
-        self._recover_compactions()  # before the listing the read is planned on
         graphs = [gname for gname in self.list_graphs() if not g or gname == g]
         if graphs:
             rows = self.dataset(graphs).repartitionByRange(target_files, "g", "s")
-            self._rewrite(graphs, rows.sortWithinPartitions("g", "s"))
+            self._rewrite(graphs, rows.sortWithinPartitions(*QUAD_COLUMNS))
 
     def _complete_swap(self, gname: str) -> None:
         """Step 3 of the commit protocol (see :meth:`_commit_generation`):

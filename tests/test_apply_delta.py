@@ -270,3 +270,36 @@ def test_every_mutation_recovers_each_graph_to_old_or_new(
     if op != "move_graph" or "urn:g:a" in got:
         call(spark, reopened)
     assert _graphs(reopened) == {g: rows for g, rows in after.items() if rows}
+
+
+# --------------------------------------------------------------------------
+# a commit that failed in this process: the next mutation recovers first
+# --------------------------------------------------------------------------
+
+
+def test_apply_delta_after_a_failed_swap_in_the_same_process(spark, tmp_path, crash):
+    """A swap that failed after graph b's COMMIT leaves b's old files
+    live; the next ``apply_delta`` on the same store finishes that swap
+    before it lists the files it reads, so it does not fail on the files
+    the swap replaces, and takes every graph to its final state."""
+    store = _store(spark, str(tmp_path / "q"))
+    with crash(*APPLY_CRASHES["between_commit_and_swap"]):
+        _apply(spark, store)
+    _apply(spark, store)
+    want = {g: rows for g, rows in NEW.items() if rows}
+    assert _graphs(store) == {**want, "urn:g:d": {BASE[-1]}}
+
+
+def test_insert_after_a_failed_swap_in_the_same_process_is_kept(spark, tmp_path, crash):
+    """A DELETE whose swap failed after its COMMIT leaves the old
+    generation live; an insert in the same process appends to the
+    committed generation, not to the old one, so reopening keeps it."""
+    path = str(tmp_path / "q")
+    store = GraphStore(spark, path)
+    store.insert_data([A1, A2])
+    with crash("_complete_swap"):
+        store.delete(spark.createDataFrame([A1], QUAD_SCHEMA))
+    A3 = quad("urn:g:a", "urn:s:3", "v3")
+    store.insert_data([A3])
+    assert _graphs(store) == {"urn:g:a": {A2, A3}}
+    assert _graphs(GraphStore(spark, path)) == {"urn:g:a": {A2, A3}}

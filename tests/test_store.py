@@ -104,31 +104,93 @@ def test_optimize_clusters_by_subject(spark, tmp_path):
     """Subject-clustered compaction (SURVEY.md §4.3): data preserved,
     every rewritten file sorted by ``s``, the files of one graph over
     disjoint ``s`` ranges, and a graph much smaller than one partition's
-    share of the compaction written as one file."""
+    share of the compaction written as one file. Inside a file the rows
+    are in whole-quad order, nulls first as Spark sorts them."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "q")
     store = _subject_store(spark, path, {"urn:g:a": 100, "urn:g:small": 3})
+    # subjects with several predicates and objects, some typed or tagged
+    store.insert_data(
+        [
+            ("urn:g:a", f"urn:s:{i:05d}", "iri", p, o, "literal", dt, lang)
+            for i in range(0, 100, 7)
+            for p in ("urn:p:y", "urn:p:a")
+            for o, dt, lang in [
+                ("w", None, None),
+                ("w", "xsd:string", None),
+                ("w", None, "en"),
+                ("a", None, None),
+            ]
+        ]
+    )
     before = {tuple(r) for r in store.quads().collect()}
     store.optimize(target_files=4)
     assert {tuple(r) for r in store.quads().collect()} == before
-    subjects = {}  # partition directory → the s column of each file
+    rows = {}  # partition directory → the rows of each file, g left out
     for name in os.listdir(path):
         if name.startswith("g="):
             d = os.path.join(path, name)
-            subjects[name] = [
-                pq.read_table(os.path.join(d, f)).column("s").to_pylist()
+            tables = [
+                pq.read_table(os.path.join(d, f), columns=QUAD_COLUMNS[1:])
                 for f in os.listdir(d)
                 if f.endswith(".parquet")
             ]
-    assert len(subjects.pop("g=urn%3Ag%3Asmall")) == 1
-    (files,) = subjects.values()
-    for s in files:
+            rows[name] = [list(zip(*t.to_pydict().values())) for t in tables]
+    assert len(rows.pop("g=urn%3Ag%3Asmall")) == 1
+    (files,) = rows.values()
+    for file_rows in files:
+        assert file_rows == sorted(
+            file_rows, key=lambda r: [(v is not None, v or "") for v in r]
+        )
+    subjects = [[r[0] for r in file_rows] for file_rows in files]
+    for s in subjects:
         assert s == sorted(s)
-    spans = sorted((s[0], s[-1]) for s in files)
+    spans = sorted((s[0], s[-1]) for s in subjects)
     assert len(spans) > 1
     for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
         assert hi_prev < lo_next
+
+
+@pytest.mark.parametrize(
+    "mutation",
+    [
+        lambda spark, st: None,  # the insert that built the store
+        lambda spark, st: st.apply_delta(
+            spark.createDataFrame(ROWS[:1], QUAD_SCHEMA),
+            spark.createDataFrame(
+                [("urn:g:a", "urn:s:3", "iri", "urn:p:x", "v3", "literal", None, None)],
+                QUAD_SCHEMA,
+            ),
+            target_graphs=["urn:g:a"],
+        ),
+        lambda spark, st: st.copy_graph("urn:g:a", "urn:g:c"),
+        lambda spark, st: st.move_graph("urn:g:a", "urn:g:b"),
+        lambda spark, st: st.optimize(),
+    ],
+    ids=["insert", "apply_delta", "copy_graph", "move_graph", "optimize"],
+)
+def test_every_store_file_is_zstd_parquet(spark, tmp_path, mutation):
+    """Whatever wrote it, every parquet file in the store has only ZSTD
+    column chunks (read from the footer)."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "q")
+    store = GraphStore(spark, path)
+    store.insert_data(ROWS)
+    mutation(spark, store)
+    codecs = set()
+    for root, _, names in os.walk(path):
+        for name in names:
+            if name.endswith(".parquet"):
+                meta = pq.ParquetFile(os.path.join(root, name)).metadata
+                assert meta.num_row_groups >= 1
+                codecs |= {
+                    meta.row_group(i).column(j).compression
+                    for i in range(meta.num_row_groups)
+                    for j in range(meta.num_columns)
+                }
+    assert codecs == {"ZSTD"}
 
 
 def test_optimize_runs_one_compaction_whatever_the_graph_count(
