@@ -6846,9 +6846,9 @@ def kg_pipeline_incremental_q(spark, sf_dir):
     71.9 s same-session full refresh at 10k/1% (tools/inc_volume.py,
     equivalence-verified at volume) — the pre-ledger algorithm lost at
     254.5 s because it compiled all 16 updates twice; the ledger makes
-    the stale side one broadcast lookup and checkpoint_mem collapses
-    the per-update Catalyst analysis cost. jobs=8 (late r10): the
-    fresh-side derivations checkpoint concurrently — the DAG's own
+    the stale side one broadcast lookup, and the scratch stores' flat
+    parquet scans keep the per-update Catalyst analysis cheap. jobs=8
+    (late r10): the fresh-side derivations checkpoint concurrently — the DAG's own
     fan-out — cutting the fresh-plan floor to 11.9 s and the
     fresh-session incremental to 32.4 s (BASELINE.md r10 jobs table). Correctness: full-refresh
     equivalence incl. the cross-source delete-rederive case AND the

@@ -335,7 +335,7 @@ def _setups(spark, entrymod, all_queries, sf_dir: str, run_set: set[str]) -> Non
 
 
 def _reset(spark) -> None:
-    # queries are independent: drop caches (in-memory store unions) AND
+    # queries are independent: drop cached tables AND
     # localCheckpoint RDDs (clearCache doesn't touch those) so one
     # query's residue doesn't GC-thrash the next — matches how each
     # would run in its own job at scale; then force a full GC so one

@@ -23,7 +23,7 @@ for it), and releases its intermediates before returning.
   persistent RDD after consuming each query's result; a library caller
   in a long-lived session takes them over with :meth:`Checkpoints.own`
   and releases them once the result is consumed, as ``execute_update``
-  does after the writes to a parquet store.
+  does after its writes.
 * :class:`Checkpoints` owns what it pinned or adopted. Iterative loops
   call :meth:`~Checkpoints.round_done` after each round's single action:
   the lazy checkpoints of round *i* are referenced by round *i+1*'s

@@ -43,7 +43,9 @@ GRAPH_NS = "https://data.hetarchief.be/graph/"
 
 
 class Engine:
-    """A quad store plus the SPARQL-Update execution path."""
+    """A quad store plus the SPARQL-Update execution path. Without
+    ``store_path`` the store makes its own temp directory, which
+    ``engine.store.close()`` and interpreter exit remove."""
 
     def __init__(self, spark: SparkSession, store_path: str | None = None):
         from .federation import ServiceRegistry

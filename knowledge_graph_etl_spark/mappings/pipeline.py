@@ -309,7 +309,6 @@ def run_pipeline(
         # previous updates appended)
         from ..terms import QUAD_COLUMNS
 
-        engine.store.checkpoint_mem()
         derived = _plan_updates(
             engine, ledger_updates(sparql_dir, env), jobs, carry=False
         )
@@ -486,18 +485,17 @@ class Ledger:
     delete-then-rederive closure algorithm got exactly that case wrong
     (pinned by test_incremental_shared_role_survives_user_removal).
 
-    Storage: a parquet directory next to a file-backed store
+    Storage: a parquet directory inside the engine's store directory
     (``<store>/_ledger/organizations`` — corpus-sized but narrow),
     HASH-BUCKETED on the group key (``bucket = pmod(xxhash64(grp),
     buckets)`` partition column): an incremental run rewrites ONLY the
     buckets its affected groups hash into (Spark dynamic partition
     overwrite in :meth:`overwrite_buckets`), so the per-run ledger
     write is ∝ delta, not corpus — the same partition-granular
-    copy-on-write discipline as the quad store itself. In-memory
-    engines get a session-cached DataFrame attached to the Engine so
-    successive runs share it. Full (seed) writes use write-tmp →
-    remove-old → rename; a crash mid-write loses only the ledger,
-    which reseeds from the next run's old snapshot."""
+    copy-on-write discipline as the quad store itself. Full (seed)
+    writes use write-tmp → remove-old → rename; a crash mid-write
+    loses only the ledger, which reseeds from the next run's old
+    snapshot."""
 
     #: bucket count for the grp-hash partition layout — sized so one
     #: bucket of a billion-quad ledger is a few GB (rewriteable in one
@@ -505,10 +503,9 @@ class Ledger:
     #: buckets
     BUCKETS = 64
 
-    def __init__(self, spark, path: str | None = None):
+    def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path
-        self._mem = None
 
     @staticmethod
     def bucket_col():
@@ -518,47 +515,29 @@ class Ledger:
 
     @classmethod
     def for_engine(cls, engine: Engine, graph: str = "organizations") -> "Ledger":
-        if engine.store.path:
-            return cls(
-                engine.spark,
-                os.path.join(engine.store.path, "_ledger", graph),
-            )
-        led = getattr(engine, "_ledger_mem", None)
-        if led is None:
-            led = cls(engine.spark)
-            engine._ledger_mem = led
-        return led
+        return cls(engine.spark, os.path.join(engine.store.path, "_ledger", graph))
 
     def read(self):
         """The current ledger DataFrame (with its ``bucket`` partition
-        column for file-backed ledgers), or None when never seeded."""
-        if self.path is not None:
-            if not os.path.isdir(self.path):
-                return None
-            return self.spark.read.parquet(self.path)
-        return self._mem
+        column), or None when never seeded."""
+        if not os.path.isdir(self.path):
+            return None
+        return self.spark.read.parquet(self.path)
 
     def write(self, df) -> None:
         """Full (seed) write: the whole ledger, bucketed, via the
         tmp-swap protocol."""
-        if self.path is not None:
-            tmp = self.path + ".tmp"
-            # the write fully materializes df (which may READ the old
-            # generation) before the old directory is touched
-            out = df
-            if "bucket" not in out.columns:
-                out = out.withColumn("bucket", self.bucket_col())
-            out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-            import shutil
+        tmp = self.path + ".tmp"
+        # the write fully materializes df (which may READ the old
+        # generation) before the old directory is touched
+        out = df
+        if "bucket" not in out.columns:
+            out = out.withColumn("bucket", self.bucket_col())
+        out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        import shutil
 
-            shutil.rmtree(self.path, ignore_errors=True)
-            os.replace(tmp, self.path)
-        else:
-            new = df.cache()
-            new.count()
-            if self._mem is not None:
-                self._mem.unpersist()
-            self._mem = new
+        shutil.rmtree(self.path, ignore_errors=True)
+        os.replace(tmp, self.path)
 
     def overwrite_buckets(self, delta, touched: list[int]) -> None:
         """Partition-granular update: ``delta`` must hold the COMPLETE
@@ -574,8 +553,7 @@ class Ledger:
         exactly an emptied bucket at fixture scale). The CALLER must
         sever any lineage reading this ledger's path before passing the
         delta (Spark refuses to overwrite a path it is reading — the
-        incremental pipeline checkpoints the kept-rows leg). In-memory
-        ledgers take a full :meth:`write` instead.
+        incremental pipeline checkpoints the kept-rows leg).
 
         Crash window (weaker than the seed write's tmp-swap): writes
         land in Spark's staging dir until job commit, so a crash BEFORE
@@ -585,11 +563,6 @@ class Ledger:
         ``_ledger`` directory; the next incremental run reseeds it from
         the old snapshot (one full-derivation pass). The quad store
         itself is never at risk: the ledger is derived state."""
-        if self.path is None:
-            raise ValueError(
-                "overwrite_buckets is the file-backed fast path; "
-                "in-memory ledgers take a full write()"
-            )
         out = delta
         if "bucket" not in out.columns:
             out = out.withColumn("bucket", self.bucket_col())
@@ -634,10 +607,10 @@ class Ledger:
         it in place (its own tmp-swap), re-clustered by ``grp`` while at
         it (the probe side filters on grp, so grp-sorted files give the
         scan min/max pruning for free). Cost ∝ fragmented buckets, never
-        the whole ledger; untouched buckets are never read. In-memory
-        ledgers have nothing to compact. Content equivalence is
-        pytest-pinned (tests/test_pipeline.py)."""
-        if self.path is None or not os.path.isdir(self.path):
+        the whole ledger; untouched buckets are never read. A
+        never-seeded ledger has nothing to compact. Content equivalence
+        is pytest-pinned (tests/test_pipeline.py)."""
+        if not os.path.isdir(self.path):
             return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
         from ..extensions.layout import compact_files
 
@@ -735,10 +708,6 @@ def _derive_ledger(
 
     from ..terms import QUAD_COLUMNS
 
-    # flatten the staging store's plan tree ONCE before compiling 16
-    # deep-join updates against it — see GraphStore.checkpoint_mem
-    # (driver-side analysis was 3-10x the execution cost otherwise)
-    engine.store.checkpoint_mem()
     items = [
         (key, query)
         for key, query in ledger_updates(sparql_dir, env)
@@ -1016,6 +985,7 @@ def run_pipeline_incremental(
             )
         led_df = pin(_derive_ledger(scratch, sparql_dir, env, jobs=jobs))
         ledger.write(led_df)
+        scratch.store.close()
         led_df = ledger.read()
         counters["ledger_seeded"] = True
     stale = pin(
@@ -1149,47 +1119,40 @@ def run_pipeline_incremental(
             )
         )
     counters["fresh_ledger_rows"] = fresh_led.count()
+    scratch.store.close()
     counters["t_fresh_plan"] = round(_time.time() - _t0, 1)
 
     # 5. new ledger, reference-counted delete, insert, provenance
     _t0 = _time.time()
-    if ledger.path is not None:
-        # partition-granular rewrite: only the buckets the affected or
-        # fresh groups hash into change; the delta is their COMPLETE
-        # new content (kept rows of those buckets minus affected
-        # groups, plus every fresh row — fresh grp buckets are in the
-        # touched set by construction, so nothing leaks)
-        bcol = Ledger.bucket_col()
-        touched = (
-            affected_grps.select(bcol.alias("bucket"))
-            .unionByName(fresh_led.select(bcol.alias("bucket")))
-            .distinct()
-        )
-        # one collect serves both the counter and overwrite_buckets'
-        # touched list (was a separate count job + a collect job)
-        touched_list = [r["bucket"] for r in touched.collect()]
-        counters["ledger_buckets_touched"] = len(touched_list)
-        # checkpoint the kept side BEFORE unioning: (a) the write must
-        # not read the path it overwrites, and (b) checkpointing a
-        # Union of a pruned-join subtree trips Catalyst's constraint
-        # rewrite (key-not-found on the pruned attribute) — two flat
-        # LogicalRDD legs sidestep both
-        kept = pin(
-            led_df.where(F.col("bucket").isin(touched_list))
-            .join(F.broadcast(affected_grps), "grp", "left_anti")
-            .select("grp", *QUAD_COLUMNS)
-        )
-        delta = kept.unionByName(
-            fresh_led.select("grp", *QUAD_COLUMNS)
-        ).dropDuplicates(["grp", *QUAD_COLUMNS])
-        ledger.overwrite_buckets(delta, touched_list)
-    else:
-        new_led = (
-            led_df.join(F.broadcast(affected_grps), "grp", "left_anti")
-            .unionByName(fresh_led)
-            .dropDuplicates(["grp", *QUAD_COLUMNS])
-        )
-        ledger.write(new_led)
+    # partition-granular rewrite: only the buckets the affected or
+    # fresh groups hash into change; the delta is their COMPLETE new
+    # content (kept rows of those buckets minus affected groups, plus
+    # every fresh row — fresh grp buckets are in the touched set by
+    # construction, so nothing leaks)
+    bcol = Ledger.bucket_col()
+    touched = (
+        affected_grps.select(bcol.alias("bucket"))
+        .unionByName(fresh_led.select(bcol.alias("bucket")))
+        .distinct()
+    )
+    # one collect serves both the counter and overwrite_buckets'
+    # touched list (was a separate count job + a collect job)
+    touched_list = [r["bucket"] for r in touched.collect()]
+    counters["ledger_buckets_touched"] = len(touched_list)
+    # checkpoint the kept side BEFORE unioning: (a) the write must not
+    # read the path it overwrites, and (b) checkpointing a Union of a
+    # pruned-join subtree trips Catalyst's constraint rewrite
+    # (key-not-found on the pruned attribute) — two flat LogicalRDD
+    # legs sidestep both
+    kept = pin(
+        led_df.where(F.col("bucket").isin(touched_list))
+        .join(F.broadcast(affected_grps), "grp", "left_anti")
+        .select("grp", *QUAD_COLUMNS)
+    )
+    delta = kept.unionByName(
+        fresh_led.select("grp", *QUAD_COLUMNS)
+    ).dropDuplicates(["grp", *QUAD_COLUMNS])
+    ledger.overwrite_buckets(delta, touched_list)
     new_led = ledger.read()
     counters["t_ledger_write"] = round(_time.time() - _t0, 1)
 

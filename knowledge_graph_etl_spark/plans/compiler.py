@@ -1772,16 +1772,12 @@ def execute_update(node, store) -> None:
         return
     if isinstance(node, (DeleteWhere, InsertWhere)):
         # the update owns its WHERE pin and releases it once the writes
-        # have returned: a parquet store's files never read it again. An
-        # in-memory store's cached pieces keep it in their lineage, and a
-        # read after a DELETE/INSERT recomputes through it, so there it
-        # lives as long as the store's data.
+        # have returned: the store's files never read it again
         ck = Checkpoints()
         try:
             _modify(node, store, ck)
         finally:
-            if store.path:
-                ck.release()
+            ck.release()
         return
     raise TypeError(f"unexpected update node {node!r}")
 

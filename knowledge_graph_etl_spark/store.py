@@ -19,9 +19,13 @@ replaces graphs — delete, apply_delta, CLEAR/DROP, COPY/MOVE and
 old or its new generation. Every public mutation first finishes or rolls
 back a commit left pending (by a crash, or by an error earlier in this
 process), before it lists a file or plans a read. No driver-side collects,
-except two: ``delete`` without ``target_graphs`` collects the batch's
-distinct graphs, and the in-memory store's ``list_graphs`` collects the
-stored ones.
+except one: ``delete`` without ``target_graphs`` collects the batch's
+distinct graphs.
+
+One backend: a store always has a directory. ``GraphStore(spark)``
+without a path makes its own under the system temp directory and runs
+the same writes, commit protocol and recovery as a caller's path;
+:meth:`GraphStore.close` or normal interpreter exit removes it.
 
 On-disk format: every file the store writes is zstd-compressed parquet
 (:data:`PARQUET_CODEC`, set per write, so a session's codec conf changes
@@ -31,15 +35,16 @@ whole-quad (``QUAD_COLUMNS``) order.
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
 import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ckpt import pin
 from .terms import QUAD_COLUMNS, QUAD_SCHEMA
 
 # Spark writes Hive-style escaped partition directories (see Spark's
@@ -85,8 +90,7 @@ def _recovered(mutation):
 
     @functools.wraps(mutation)
     def run(self, *args, **kwargs):
-        if self.path:
-            self._recover_compactions()
+        self._recover_compactions()
         return mutation(self, *args, **kwargs)
 
     return run
@@ -107,38 +111,46 @@ def _unescape_partition_value(name: str) -> str:
     return "".join(out)
 
 
+#: directories that path-less stores made and have not yet removed
+_OWNED_DIRS: set[str] = set()
+
+
+@atexit.register
+def _remove_owned_dirs() -> None:
+    """Remove every path-less store's directory at interpreter exit. Not
+    on garbage collection: a lazy DataFrame a store returned still reads
+    the files after the store object is gone."""
+    while _OWNED_DIRS:
+        shutil.rmtree(_OWNED_DIRS.pop(), ignore_errors=True)
+
+
 class GraphStore:
-    """Parquet-backed quad store. ``path=None`` gives an in-memory store
-    (a union of inserted DataFrames) for tests and small pipelines."""
+    """Parquet-backed quad store in the directory ``path``. With
+    ``path=None`` the store makes its own temp directory, which
+    :meth:`close` and normal interpreter exit remove."""
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
+        self._owned = path is None
+        if self._owned:
+            path = tempfile.mkdtemp(prefix="graphstore_")
+            _OWNED_DIRS.add(path)
         self.path = path
-        self._mem: DataFrame | None = None
-        # cached per-insert batches backing the in-memory union — tracked so
-        # clear/drop/close can unpersist them (CacheManager holds JVM-side
-        # references; dropping the Python objects frees nothing)
-        self._mem_pieces: list[DataFrame] = []
-        if path:
-            os.makedirs(path, exist_ok=True)
-            # finish (or roll back) any compaction a previous process died in
-            self._recover_compactions()
+        os.makedirs(path, exist_ok=True)
+        # finish (or roll back) any compaction a previous process died in
+        self._recover_compactions()
 
     # -- read ------------------------------------------------------------
 
     def quads(self) -> DataFrame:
-        """All quads. Filters on ``g`` prune partitions (parquet) before scan."""
-        if self.path:
-            if not self._has_data():
-                return self.spark.createDataFrame([], QUAD_SCHEMA)
-            return (
-                self.spark.read.schema(QUAD_SCHEMA)
-                .option("basePath", self.path)
-                .parquet(self.path)
-            )
-        if self._mem is None:
+        """All quads. Filters on ``g`` prune partitions before the scan."""
+        if not self._has_data():
             return self.spark.createDataFrame([], QUAD_SCHEMA)
-        return self._mem
+        return (
+            self.spark.read.schema(QUAD_SCHEMA)
+            .option("basePath", self.path)
+            .parquet(self.path)
+        )
 
     def graph(self, g: str) -> DataFrame:
         return self.quads().where(F.col("g") == g)
@@ -180,30 +192,9 @@ class GraphStore:
         batch = self._prepare_batch(
             new_quads, dedup_against_store, target_graphs, batch_distinct
         )
-        if self.path:
-            batch.write.mode("append").partitionBy("g").parquet(
-                self.path, compression=PARQUET_CODEC
-            )
-        else:
-            # materialize ONLY the new batch through the cache:
-            # InMemoryRelation carries REAL size stats, so downstream
-            # pattern-scan joins get sane broadcast decisions instead of
-            # defaultSizeInBytes=Long.Max cascading into astronomical join
-            # estimates. The store stays a LAZY union of cached pieces —
-            # re-caching the whole union per insert would re-materialize
-            # the entire store on every one of a pipeline's 30+ inserts
-            # (measured 2× on the flagship end-to-end query).
-            batch = batch.cache()
-            batch.count()
-            self._mem_pieces.append(batch)
-            cur = self._mem
-            self._mem = batch if cur is None else cur.unionByName(batch)
-            # an insert-heavy session that never clears would otherwise
-            # grow cache entries and union-plan depth without bound;
-            # past the threshold, fold the pieces into ONE cached
-            # DataFrame (the same shape the drop path leaves behind)
-            if len(self._mem_pieces) >= self._MEM_CONSOLIDATE_AT:
-                self._consolidate_mem()
+        batch.write.mode("append").partitionBy("g").parquet(
+            self.path, compression=PARQUET_CODEC
+        )
 
     def _prepare_batch(
         self,
@@ -218,12 +209,12 @@ class GraphStore:
         ``target_graphs`` the existing-side scan covers ONLY those
         graph partitions — is pinned by physical-plan evidence
         (tests/test_plan_evidence.py) rather than docstring alone. Into a
-        parquet store that holds none of ``target_graphs`` the batch
-        plans no join (read from the directory listing, no Spark job)."""
+        store that holds none of ``target_graphs`` the batch plans no
+        join (read from the directory listing, no Spark job)."""
         batch = new_quads.select(*QUAD_COLUMNS)
         if not batch_distinct:
             batch = batch.dropDuplicates(QUAD_COLUMNS)
-        if self.path and target_graphs is not None:
+        if target_graphs is not None:
             # an anti-join against graphs that are not stored removes
             # nothing; the directory listing says which are, with no job
             stored = self.list_graphs()
@@ -300,10 +291,10 @@ class GraphStore:
         ledger). ``ins_quads`` must also be duplicate-free (the caller
         dedups), like ``batch_distinct``.
 
-        Only rows whose ``g`` is in ``target_graphs`` count, in both
-        backends: delete and insert rows of any other graph are
-        discarded, and every other graph is left untouched. The final
-        generations are written and committed by :meth:`_rewrite`."""
+        Only rows whose ``g`` is in ``target_graphs`` count: delete and
+        insert rows of any other graph are discarded, and every other
+        graph is left untouched. The final generations are written and
+        committed by :meth:`_rewrite`."""
         targets = list(dict.fromkeys(target_graphs))
         if not targets:
             return
@@ -331,10 +322,7 @@ class GraphStore:
         that replaces graphs is a caller of this one method: ``delete``
         and ``apply_delta``, CLEAR/DROP, COPY/MOVE and ``optimize``.
 
-        In memory: the other graphs plus ``rows`` are cached as the one
-        piece that replaces the store.
-
-        Parquet: ``rows`` is written in ONE ``partitionBy("g")`` job into
+        ``rows`` is written in ONE ``partitionBy("g")`` job into
         a batch directory ``_compact_tmp/delta=<uuid>``. Every read of
         the store that ``rows`` makes finishes inside that write (with
         the sampling and shuffle jobs it starts), before any graph is
@@ -345,14 +333,6 @@ class GraphStore:
         Spark job. Its public callers have already recovered pending
         commits (:func:`_recovered`); a batch directory left by a crash
         is deleted then like any uncommitted tmp."""
-        if not self.path:
-            if self._mem is None and rows is None:
-                return
-            kept = self.quads().where(~F.col("g").isin(targets))
-            merged = (kept if rows is None else kept.unionByName(rows)).cache()
-            merged.count()
-            self._replace_mem(merged)
-            return
         stored = set(self.list_graphs())
         batch_dir = os.path.join(
             self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
@@ -400,36 +380,6 @@ class GraphStore:
             pass
         self._complete_swap(gname)
 
-    _MEM_CONSOLIDATE_AT = 32
-
-    def _consolidate_mem(self) -> None:
-        """Fold the per-insert cached pieces into one cached DataFrame.
-
-        Each in-memory insert caches its (deduped) batch separately so the
-        store stays a lazy union — cheap per insert, but unbounded in piece
-        count. Once the union is this deep, one consolidation pass costs a
-        single scan of data that is already columnar-in-memory, and every
-        later read replaces a 32-way union with one InMemoryRelation (with
-        exact stats, so join-side broadcast decisions stay sane)."""
-        merged = self._mem_pieces[0]
-        for piece in self._mem_pieces[1:]:
-            merged = merged.unionByName(piece)
-        merged = merged.cache()
-        merged.count()
-        self._replace_mem(merged)
-
-    def _replace_mem(self, sealed: DataFrame) -> None:
-        """Make the materialized ``sealed`` the whole in-memory store and
-        release the cached pieces it was built from. It must be
-        materialized first: releasing a piece a lazy plan still reads
-        would re-run that piece's lineage. Without this one pass per
-        rewrite, a full-refresh pipeline replayed N times would pin N
-        copies of the corpus in the cache."""
-        for piece in self._mem_pieces:
-            piece.unpersist()
-        self._mem_pieces = [sealed]
-        self._mem = sealed
-
     @_recovered
     def clear(self, g: str) -> None:
         """``CLEAR SILENT GRAPH <g>`` (reference load_knowledge_graph.py:341):
@@ -475,26 +425,6 @@ class GraphStore:
             return
         self._rewrite([dst, src], self._relabeled(src, dst))
 
-    def checkpoint_mem(self) -> None:
-        """Sever an in-memory store's plan tree: replace the lazy union of
-        cached insert pieces with ONE eagerly checkpointed DataFrame, so every later pattern scan is a flat ``LogicalRDD``
-        leaf instead of re-carrying the full load lineage.
-
-        Why this exists: Catalyst ANALYSIS cost of a BGP self-join is
-        proportional to (join count × leaf subtree size). A scratch store
-        built from a handful of ``load_json`` inserts has a leaf subtree
-        of 5+ unioned dedup anti-join trees, and compiling the reference's
-        16-pattern mapping WHEREs against it measured 17-43 s of pure
-        driver-side analysis PER UPDATE (r10 profile) — 3-10× the actual
-        execution. One checkpoint after loading collapses that to
-        sub-second. No-op for file-backed stores (parquet leaves are
-        already flat) and empty stores. The checkpoint lives as long as
-        the store's data (an unowned :func:`.ckpt.pin`; harnesses sweep
-        getPersistentRDDs)."""
-        if self._mem is None:
-            return
-        self._replace_mem(pin(self._mem))
-
     @_recovered
     def optimize(self, g: str | None = None, target_files: int = 8) -> None:
         """Compact the store's files (the reference's post-load
@@ -514,8 +444,6 @@ class GraphStore:
         instead of scanning the graph; and the runs of equal predicates
         and objects inside a subject compress better than a subject-only
         sort leaves them."""
-        if not self.path:
-            return
         graphs = [gname for gname in self.list_graphs() if not g or gname == g]
         if graphs:
             rows = self.dataset(graphs).repartitionByRange(target_files, "g", "s")
@@ -612,16 +540,12 @@ class GraphStore:
         return self.spark.table(table)
 
     def list_graphs(self) -> list[str]:
-        if self.path:
-            out = [
-                _unescape_partition_value(name[2:])
-                for name in os.listdir(self.path)
-                if name.startswith("g=")
-            ]
-            return sorted(out)
-        if self._mem is None:
-            return []
-        return [r["g"] for r in self._mem.select("g").distinct().collect()]
+        out = [
+            _unescape_partition_value(name[2:])
+            for name in os.listdir(self.path)
+            if name.startswith("g=")
+        ]
+        return sorted(out)
 
     # -- internals ---------------------------------------------------------
 
@@ -629,10 +553,8 @@ class GraphStore:
         return any(n.startswith("g=") for n in os.listdir(self.path))
 
     def close(self) -> None:
-        """Release every cached in-memory batch (no-op for parquet stores).
-        The Spark CacheManager holds JVM-side references, so discarding the
-        Python ``GraphStore`` object alone frees nothing."""
-        for piece in self._mem_pieces:
-            piece.unpersist()
-        self._mem_pieces = []
-        self._mem = None
+        """Remove the directory a path-less store made (the store is
+        unusable afterwards); a caller's path and its data stay."""
+        if self._owned:
+            _OWNED_DIRS.discard(self.path)
+            shutil.rmtree(self.path, ignore_errors=True)

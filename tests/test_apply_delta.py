@@ -73,9 +73,9 @@ def _graphs(store):
     return out
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_multi_graph_delta(spark, tmp_path, mode):
-    path = str(tmp_path / "q") if mode == "parquet" else None
+    path = str(tmp_path / "q")
     store = _store(spark, path)
     _apply(spark, store)
     got = _graphs(store)
@@ -86,13 +86,12 @@ def test_multi_graph_delta(spark, tmp_path, mode):
         "urn:g:d": {BASE[-1]},
     }
     assert sorted(store.list_graphs()) == ["urn:g:a", "urn:g:c", "urn:g:d"]
-    if path:
-        # b's partition is gone, not left as an empty directory, and the
-        # batch directory was removed
-        names = set(os.listdir(path))
-        assert "g=" + _escape_partition_value("urn:g:b") not in names
-        tmp_root = os.path.join(path, "_compact_tmp")
-        assert not os.path.isdir(tmp_root) or os.listdir(tmp_root) == []
+    # b's partition is gone, not left as an empty directory, and the
+    # batch directory was removed
+    names = set(os.listdir(path))
+    assert "g=" + _escape_partition_value("urn:g:b") not in names
+    tmp_root = os.path.join(path, "_compact_tmp")
+    assert not os.path.isdir(tmp_root) or os.listdir(tmp_root) == []
 
 
 def test_delete_of_every_quad_drops_the_partition(spark, tmp_path):

@@ -119,20 +119,16 @@ def _modify_store(eng):
     }
 
 
-def test_parquet_update_leaves_no_new_pinned_rdds(spark, tmp_path):
+@pytest.mark.parametrize("where", ["path", "pathless"])
+def test_update_leaves_no_new_pinned_rdds(spark, tmp_path, where):
     """INSERT WHERE and DELETE/INSERT WHERE release their WHERE pin once
-    the writes return, and the store reads back the updated quads."""
-    eng = Engine(spark, str(tmp_path / "store"))
+    the writes return, and the store reads back the updated quads, in a
+    caller's directory and in a path-less store's own one alike."""
+    eng = Engine(spark, str(tmp_path / "store") if where == "path" else None)
     before = persistent_rdd_ids(spark)
     _modify_store(eng)
     assert _new_pins(spark, before) == set()
-
-
-def test_inmemory_store_reads_back_after_updates(spark):
-    """The in-memory store's cached pieces read the updates' WHERE pins
-    through their lineage (the read after the DELETE/INSERT recomputes
-    through them), so those pins must outlive the update."""
-    _modify_store(Engine(spark))
+    eng.store.close()
 
 
 # -- operators pin their own input --------------------------------------------------

@@ -28,9 +28,9 @@ def _graph_rows(eng, g):
     }
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_add_graph_unions(spark, tmp_path, mode):
-    eng = _eng(spark, None if mode == "mem" else str(tmp_path / "q"))
+    eng = _eng(spark, str(tmp_path / "q"))
     eng.update("ADD GRAPH <urn:g:a> TO GRAPH <urn:g:b>")
     assert _graph_rows(eng, "urn:g:b") == {
         ("urn:s:1", "urn:p:v", "x"),
@@ -43,9 +43,9 @@ def test_add_graph_unions(spark, tmp_path, mode):
     assert len(_graph_rows(eng, "urn:g:b")) == 3
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_copy_graph_replaces(spark, tmp_path, mode):
-    eng = _eng(spark, None if mode == "mem" else str(tmp_path / "q"))
+    eng = _eng(spark, str(tmp_path / "q"))
     eng.update("COPY GRAPH <urn:g:a> TO GRAPH <urn:g:b>")
     assert _graph_rows(eng, "urn:g:b") == {
         ("urn:s:1", "urn:p:v", "x"),
@@ -54,9 +54,9 @@ def test_copy_graph_replaces(spark, tmp_path, mode):
     assert len(_graph_rows(eng, "urn:g:a")) == 2
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_move_graph_drops_source(spark, tmp_path, mode):
-    eng = _eng(spark, None if mode == "mem" else str(tmp_path / "q"))
+    eng = _eng(spark, str(tmp_path / "q"))
     eng.update("MOVE GRAPH <urn:g:a> TO GRAPH <urn:g:b>")
     assert _graph_rows(eng, "urn:g:b") == {
         ("urn:s:1", "urn:p:v", "x"),
@@ -142,13 +142,13 @@ def test_load_silent_suppresses_parse_failure(spark, tmp_path):
     assert len(_graph_rows(eng, "urn:g:a")) == 2  # store untouched
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_apply_delta_equals_delete_then_insert(spark, tmp_path, mode):
     """GraphStore.apply_delta (r14): one copy-on-write rewrite must equal
     delete-then-insert for disjoint delete/insert batches, including
     no-op deletes (absent quads) and inserts already present (set
     semantics), and must leave other graphs untouched: rows outside
-    ``target_graphs`` are discarded in both modes."""
+    ``target_graphs`` are discarded."""
     from knowledge_graph_etl_spark.terms import QUAD_SCHEMA
 
     def quad(g, s, o):
@@ -176,10 +176,10 @@ def test_apply_delta_equals_delete_then_insert(spark, tmp_path, mode):
     d_df = spark.createDataFrame(dels, QUAD_SCHEMA)
     i_df = spark.createDataFrame(ins, QUAD_SCHEMA)
 
-    fused = build(str(tmp_path / "f") if mode == "parquet" else None)
+    fused = build(str(tmp_path / "f"))
     fused.store.apply_delta(d_df, i_df, target_graphs=["urn:g:a"])
 
-    twostep = build(str(tmp_path / "t") if mode == "parquet" else None)
+    twostep = build(str(tmp_path / "t"))
     twostep.store.delete(d_df.where("g = 'urn:g:a'"), target_graphs=["urn:g:a"])
     twostep.store.insert(i_df.where("g = 'urn:g:a'"), target_graphs=["urn:g:a"])
 

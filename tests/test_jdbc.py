@@ -111,3 +111,36 @@ def test_jdbc_partitioned_parallel_read(spark, derby_docs):
     rows = out.collect()
     assert sorted(r["doc_id"] for r in rows) == ["0", "1", "2"]
     assert len(rows) == len(DOCS)  # range split: no dup, no loss
+
+
+def test_jdbc_key_col_keeps_duplicates_distinct(spark):
+    doc = json.dumps({"name": "same doc"})
+    df = spark.createDataFrame([(1, doc), (2, doc)], "pk int, doc string")
+    (
+        df.write.format("jdbc")
+        .option("url", DERBY_URL)
+        .option("dbtable", "DUPDOCS")
+        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+        .mode("overwrite")
+        .save()
+    )
+    keyed = read_postgres_json(
+        spark,
+        DERBY_URL,
+        schema="s", table="t", field="f",
+        doc_query='(SELECT "pk" AS pk, "doc" AS json FROM DUPDOCS) src',
+        key_col="pk",
+        driver="org.apache.derby.jdbc.EmbeddedDriver",
+    )
+    rows = keyed.collect()
+    assert len(rows) == 2
+    assert {r["doc_id"] for r in rows} == {"1", "2"}
+    # keyless fallback still collapses byte-identical duplicates
+    keyless = read_postgres_json(
+        spark,
+        DERBY_URL,
+        schema="s", table="t", field="f",
+        doc_query='(SELECT "doc" AS json FROM DUPDOCS) src',
+        driver="org.apache.derby.jdbc.EmbeddedDriver",
+    )
+    assert len({r["doc_id"] for r in keyless.collect()}) == 1

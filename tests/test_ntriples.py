@@ -1,5 +1,7 @@
 """N-Triples sink/source round-trip (SURVEY.md §2 ops 3, 5)."""
 
+import pytest
+
 from knowledge_graph_etl_spark.sources import read_ntriples, to_ntriples_lines, write_ntriples
 from knowledge_graph_etl_spark.store import GraphStore
 from knowledge_graph_etl_spark.terms import XSD_BOOLEAN, XSD_INTEGER, term_to_nt
@@ -85,3 +87,22 @@ def test_nquads_default_graph_and_strict(spark, tmp_path):
         read_nquads(spark, str(bad)).collect()
     # strict=False drops the bad line instead
     assert read_nquads(spark, str(bad), strict=False).count() == 0
+
+
+def test_strict_ntriples_lazy_then_raises_on_action(spark, tmp_path):
+    p = tmp_path / "bad.nt"
+    p.write_text(
+        "<urn:s:1> <urn:p:1> \"ok\" .\n"
+        "this line is not a triple\n"
+    )
+    # construction must NOT raise (and must not run a validation job)
+    df = read_ntriples(spark, str(p), graph="urn:g:x", strict=True)
+    with pytest.raises(Exception, match="unparseable"):
+        df.count()
+
+
+def test_strict_ntriples_clean_file_loads(spark, tmp_path):
+    p = tmp_path / "good.nt"
+    p.write_text("<urn:s:1> <urn:p:1> \"ok\" .\n")
+    df = read_ntriples(spark, str(p), graph="urn:g:x", strict=True)
+    assert df.count() == 1

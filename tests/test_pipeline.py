@@ -622,11 +622,6 @@ def test_pipeline_parallel_jobs_equals_sequential(spark, orgs):
     eng = Engine(spark)
     run_pipeline(eng, docs, REF_SPARQL_DIR, run_id="r", optimize=False, jobs=8)
     assert _org_rows(eng) == orgs
-    # the 16 per-update inserts really did collapse into ONE batched
-    # insert: the in-memory store holds the checkpoint_mem seal, the one
-    # mapping batch, and the provenance INSERT DATA — not 16+ pieces
-    # (threshold 32, so no consolidation interference)
-    assert len(eng.store._mem_pieces) <= 3
 
     eng2 = Engine(spark)
     run_pipeline(
@@ -767,15 +762,13 @@ def test_ledger_compact_preserves_content(spark, tmp_path_factory):
 
 
 def test_ledger_compact_noops(spark, tmp_path):
-    """compact() on an in-memory or never-seeded ledger is a safe no-op
-    reporting zeros (nothing on disk to rewrite)."""
+    """compact() on a never-seeded ledger is a safe no-op reporting zeros
+    (nothing on disk to rewrite)."""
     from knowledge_graph_etl_spark.mappings.pipeline import Ledger
 
-    mem = Ledger(spark)  # in-memory: path is None
-    assert mem.compact() == {
+    unseeded = Ledger(spark, str(tmp_path / "never_written"))
+    assert unseeded.compact() == {
         "buckets_compacted": 0,
         "files_before": 0,
         "files_after": 0,
     }
-    unseeded = Ledger(spark, str(tmp_path / "never_written"))
-    assert unseeded.compact()["buckets_compacted"] == 0

