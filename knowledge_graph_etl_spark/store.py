@@ -16,9 +16,9 @@ directory of many files); only ``insert`` appends files. Every mutation that
 replaces graphs — delete, apply_delta, CLEAR/DROP, COPY/MOVE and
 ``optimize``'s compaction — goes through one copy-on-write commit
 (:meth:`GraphStore._commit_generation`), so a crash leaves each graph at its
-old or its new generation. Every public mutation first finishes or rolls
-back a commit left pending (by a crash, or by an error earlier in this
-process), before it lists a file or plans a read. No driver-side collects,
+old or its new generation. Every public mutation and read first finishes
+or rolls back a commit left pending (by a crash, or by an error earlier in
+this process), before it lists a file or plans a read. No driver-side collects,
 except one: ``delete`` without ``target_graphs`` collects the batch's
 distinct graphs.
 
@@ -30,7 +30,11 @@ the same writes, commit protocol and recovery as a caller's path;
 On-disk format: every file the store writes is zstd-compressed parquet
 (:data:`PARQUET_CODEC`, set per write, so a session's codec conf changes
 nothing here), and every file ``optimize`` writes holds its rows in
-whole-quad (``QUAD_COLUMNS``) order.
+whole-quad (``QUAD_COLUMNS``) order. ``optimize`` sizes each graph's
+files from the parquet bytes the graph has stored (read from the
+directory listing): one file per :data:`MAX_FILE_BYTES`, and, up to
+the session's scan parallelism, one per :data:`MIN_FILE_BYTES`, so a
+graph below ``MIN_FILE_BYTES`` is one file whatever the store's size.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ import functools
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +65,13 @@ _PART_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^\x7f') | frozenset(
 #: (levels 1, 3 and 9 stored the compacted benchmark store within 4% of
 #: each other; Spark's default snappy took over 1.5x the bytes)
 PARQUET_CODEC = "zstd"
+
+#: ``optimize`` gives a graph one file per this many stored bytes
+MAX_FILE_BYTES = 128 * 1024 * 1024
+#: ... and, up to the session's scan parallelism, one per this many: a
+#: graph's scans keep several tasks, and a small graph is not cut into
+#: files whose parquet footers (about 1.6 KB each) outweigh their rows
+MIN_FILE_BYTES = 64 * 1024
 
 # a rewrite's batch directory under _compact_tmp/: '=' is always
 # escaped in a graph's tmp name, so the two can never collide
@@ -82,16 +94,17 @@ def _quad_eq_cond(left: str, right: str):
     return cond
 
 
-def _recovered(mutation):
-    """A public mutation of a parquet store first finishes or rolls back
-    the commits left pending in it (:meth:`GraphStore._recover_compactions`),
-    so it neither lists files that the recovery is about to replace nor
-    appends into a generation that a COMMIT marker has superseded."""
+def _recovered(method):
+    """A public mutation or read of the store first finishes or rolls
+    back the commits left pending in it
+    (:meth:`GraphStore._recover_compactions`), so it neither lists files
+    that the recovery is about to replace, nor appends into or reads a
+    generation that a COMMIT marker has superseded."""
 
-    @functools.wraps(mutation)
+    @functools.wraps(method)
     def run(self, *args, **kwargs):
         self._recover_compactions()
-        return mutation(self, *args, **kwargs)
+        return method(self, *args, **kwargs)
 
     return run
 
@@ -137,11 +150,15 @@ class GraphStore:
             _OWNED_DIRS.add(path)
         self.path = path
         os.makedirs(path, exist_ok=True)
+        # held by recovery, and by a rewrite from its batch write to its
+        # last commit: no thread recovers in between
+        self._lock = threading.RLock()
         # finish (or roll back) any compaction a previous process died in
         self._recover_compactions()
 
     # -- read ------------------------------------------------------------
 
+    @_recovered
     def quads(self) -> DataFrame:
         """All quads. Filters on ``g`` prune partitions before the scan."""
         if not self._has_data():
@@ -332,23 +349,30 @@ class GraphStore:
         partition and an absent one is left alone. ``rows=None`` runs no
         Spark job. Its public callers have already recovered pending
         commits (:func:`_recovered`); a batch directory left by a crash
-        is deleted then like any uncommitted tmp."""
+        is deleted then like any uncommitted tmp.
+
+        Recovery never runs from the batch write to the last commit: the
+        rewrite holds the store's lock, so another thread's read waits
+        for it, and the rewrite itself reads nothing in between."""
         stored = set(self.list_graphs())
         batch_dir = os.path.join(
             self.path, "_compact_tmp", _BATCH_PREFIX + uuid.uuid4().hex
         )
         written = {}
-        if rows is not None:
-            rows.write.partitionBy("g").parquet(batch_dir, compression=PARQUET_CODEC)
-            written = {
-                _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
-                for name in os.listdir(batch_dir)
-                if name.startswith("g=")
-            }
-        for gname in targets:
-            if gname in written or gname in stored:
-                self._commit_generation(gname, written.get(gname))
-        shutil.rmtree(batch_dir, ignore_errors=True)
+        with self._lock:
+            if rows is not None:
+                rows.write.partitionBy("g").parquet(
+                    batch_dir, compression=PARQUET_CODEC
+                )
+                written = {
+                    _unescape_partition_value(name[2:]): os.path.join(batch_dir, name)
+                    for name in os.listdir(batch_dir)
+                    if name.startswith("g=")
+                }
+            for gname in targets:
+                if gname in written or gname in stored:
+                    self._commit_generation(gname, written.get(gname))
+            shutil.rmtree(batch_dir, ignore_errors=True)
 
     def _commit_generation(self, gname: str, src: str | None) -> None:
         """Make the directory ``src`` graph ``gname``'s generation;
@@ -426,28 +450,71 @@ class GraphStore:
         self._rewrite([dst, src], self._relabeled(src, dst))
 
     @_recovered
-    def optimize(self, g: str | None = None, target_files: int = 8) -> None:
+    def optimize(self, g: str | None = None) -> None:
         """Compact the store's files (the reference's post-load
         store-optimize call, load_knowledge_graph.py:669-675): every
         stored graph (only ``g``, when given; an absent ``g`` is a no-op)
         in one rewrite through :meth:`_rewrite`.
 
-        The rows are range-partitioned by ``(g, s)`` into ``target_files``
-        partitions across the whole compaction (SURVEY.md §4.3): a graph
-        much smaller than one partition's share becomes one file, and the
-        files of one graph cover disjoint subject ranges. Within each
-        file the rows are in whole-quad order (``QUAD_COLUMNS``, nulls
-        first; SPO, since ``s_type`` follows from ``s``), written as zstd
-        parquet like every store file. Every parquet row group then
-        carries tight min/max stats on ``s``, so constant-subject
-        patterns and the build side of subject joins prune row groups
-        instead of scanning the graph; and the runs of equal predicates
-        and objects inside a subject compress better than a subject-only
-        sort leaves them."""
-        graphs = [gname for gname in self.list_graphs() if not g or gname == g]
-        if graphs:
-            rows = self.dataset(graphs).repartitionByRange(target_files, "g", "s")
-            self._rewrite(graphs, rows.sortWithinPartitions(*QUAD_COLUMNS))
+        Each graph's file count comes from the parquet bytes it has
+        stored (the directory listing, no Spark job) and the session's
+        scan parallelism ``P``::
+
+            n = max(ceil(bytes / MAX_FILE_BYTES),
+                    min(P, ceil(bytes / MIN_FILE_BYTES)), 1)
+
+        so a graph below :data:`MIN_FILE_BYTES` is one file, and a
+        store a thousand times larger gets more files, not larger ones.
+        The one-file graphs are hash-partitioned by ``g``, which needs no
+        sampling; the others are range-partitioned by ``(g, s)`` into
+        their summed ``n`` (one sampling job for all of them, which
+        spreads the partitions by rows, so each graph gets about its
+        ``n``), and the files of one graph cover disjoint subject ranges
+        (SURVEY.md §4.3). Within each file the rows are in whole-quad order
+        (``QUAD_COLUMNS``, nulls first; SPO, since ``s_type`` follows
+        from ``s``), written as zstd parquet like every store file. Every
+        parquet row group then carries tight min/max stats on ``s``, so
+        constant-subject patterns and the build side of subject joins
+        prune row groups instead of scanning the graph; and the runs of
+        equal predicates and objects inside a subject compress better
+        than a subject-only sort leaves them."""
+        stored = self._stored_bytes()
+        graphs = [gname for gname in stored if not g or gname == g]
+        if not graphs:
+            return
+        p = self.spark.sparkContext.defaultParallelism
+        files = {
+            gname: max(
+                -(-stored[gname] // MAX_FILE_BYTES),
+                min(p, -(-stored[gname] // MIN_FILE_BYTES)),
+                1,
+            )
+            for gname in graphs
+        }
+        one = [gname for gname in graphs if files[gname] == 1]
+        many = [gname for gname in graphs if files[gname] > 1]
+        parts = []
+        if one:
+            parts.append(self.dataset(one).repartition(len(one), "g"))
+        if many:
+            n = sum(files[gname] for gname in many)
+            parts.append(self.dataset(many).repartitionByRange(n, "g", "s"))
+        rows = functools.reduce(DataFrame.union, parts)
+        self._rewrite(graphs, rows.sortWithinPartitions(*QUAD_COLUMNS))
+
+    def _stored_bytes(self) -> dict[str, int]:
+        """Each stored graph → the bytes of its parquet files, from the
+        directory listing, in graph order."""
+        out = {}
+        for name in os.listdir(self.path):
+            if name.startswith("g="):
+                d = os.path.join(self.path, name)
+                out[_unescape_partition_value(name[2:])] = sum(
+                    os.path.getsize(os.path.join(d, f))
+                    for f in os.listdir(d)
+                    if not f.startswith((".", "_"))
+                )
+        return dict(sorted(out.items()))
 
     def _complete_swap(self, gname: str) -> None:
         """Step 3 of the commit protocol (see :meth:`_commit_generation`):
@@ -475,22 +542,24 @@ class GraphStore:
         authoritative (replay the swap); absent → the old partition is
         authoritative (tmp contents are garbage, discard them)."""
         tmp_root = os.path.join(self.path, "_compact_tmp")
-        if not os.path.isdir(tmp_root):
-            return
-        names = set(os.listdir(tmp_root))
-        for name in sorted(names):
-            if name.endswith(".COMMIT"):
-                esc = name[: -len(".COMMIT")]
-                if esc in names:
-                    self._complete_swap(_unescape_partition_value(esc))
-                else:
-                    # marker outlived its tmp dir: the swap already renamed
-                    # tmp into place and died before removing the marker
-                    os.remove(os.path.join(tmp_root, name))
-            elif name + ".COMMIT" not in names:
-                # uncommitted generation or batch directory from a
-                # crashed write — roll back
-                shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
+        with self._lock:
+            if not os.path.isdir(tmp_root):
+                return
+            names = set(os.listdir(tmp_root))
+            for name in sorted(names):
+                if name.endswith(".COMMIT"):
+                    esc = name[: -len(".COMMIT")]
+                    if esc in names:
+                        self._complete_swap(_unescape_partition_value(esc))
+                    else:
+                        # marker outlived its tmp dir: the swap already
+                        # renamed tmp into place and died before removing
+                        # the marker
+                        os.remove(os.path.join(tmp_root, name))
+                elif name + ".COMMIT" not in names:
+                    # uncommitted generation or batch directory from a
+                    # crashed write — roll back
+                    shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
 
     def register_view(self, name: str = "quads") -> None:
         """Expose the store to Spark SQL as a temp view: after
@@ -539,6 +608,7 @@ class GraphStore:
         )
         return self.spark.table(table)
 
+    @_recovered
     def list_graphs(self) -> list[str]:
         out = [
             _unescape_partition_value(name[2:])

@@ -204,7 +204,7 @@ MUTATIONS = {
         lambda spark, st: st.move_graph("urn:g:a", "urn:g:b"),
         {**BEFORE, "urn:g:a": set(), "urn:g:b": _relabel({A1, A2}, "urn:g:b")},
     ),
-    "optimize": (lambda spark, st: st.optimize(target_files=2), BEFORE),
+    "optimize": (lambda spark, st: st.optimize(), BEFORE),
 }
 
 
@@ -302,3 +302,94 @@ def test_insert_after_a_failed_swap_in_the_same_process_is_kept(spark, tmp_path,
     store.insert_data([A3])
     assert _graphs(store) == {"urn:g:a": {A2, A3}}
     assert _graphs(GraphStore(spark, path)) == {"urn:g:a": {A2, A3}}
+
+
+def _delete_failing_swap(spark, store, rows):
+    """DELETE ``rows``, failing with an ``OSError`` after the COMMIT
+    marker and before the swap, so the old generation stays live."""
+
+    def failing(self, gname):
+        raise OSError(f"swap of {gname}")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(GraphStore, "_complete_swap", failing)
+        with pytest.raises(OSError):
+            store.delete(spark.createDataFrame(rows, QUAD_SCHEMA))
+
+
+@pytest.fixture
+def failed_swap(spark, tmp_path):
+    """A store whose DELETE of ``v1`` failed before its swap: graph a's
+    old files, ``v1`` and ``v2``, are still live, and the committed
+    generation holds ``v2``."""
+    store = GraphStore(spark, str(tmp_path / "q"))
+    store.insert_data([A1])
+    store.insert_data([A2])
+    _delete_failing_swap(spark, store, [A1])
+    return store
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda st: st.quads(),
+        lambda st: st.graph("urn:g:a"),
+        lambda st: st.dataset(["urn:g:a"]),
+    ],
+    ids=["quads", "graph", "dataset"],
+)
+def test_reads_after_a_failed_swap_in_the_same_process(failed_swap, count_jobs, read):
+    """A read on the store finishes the pending swap before it plans its
+    scan, with no Spark job, so it never returns the superseded
+    generation."""
+    frames = []
+    assert count_jobs(lambda: frames.append(read(failed_swap))) == []
+    assert [r["o_value"] for r in frames[0].collect()] == ["v2"]
+
+
+def test_list_graphs_after_a_failed_swap_in_the_same_process(spark, tmp_path):
+    """A DELETE that emptied graph a, failing before its swap, leaves a's
+    partition live; ``list_graphs`` finishes the swap and drops it."""
+    store = GraphStore(spark, str(tmp_path / "q"))
+    store.insert_data([A1, B1])
+    _delete_failing_swap(spark, store, [A1])
+    assert store.list_graphs() == ["urn:g:b"]
+
+
+def test_concurrent_reads_finish_a_failed_swap_once(spark, tmp_path):
+    """Reads from more threads than cores, switching often, each see the
+    committed generation: the store's lock lets one of them finish the
+    pending swap and the others find nothing left to recover. Several
+    rounds, as a race shows only in some of them."""
+    import sys
+    import threading
+
+    store = GraphStore(spark, str(tmp_path / "q"))
+    store.insert_data([A2])
+    n_threads = 2 * (os.cpu_count() or 1) + 2
+    interval = sys.getswitchinterval()
+    for i in range(5):
+        stale = quad("urn:g:a", f"urn:s:x{i}", f"x{i}")
+        store.insert_data([stale])
+        _delete_failing_swap(spark, store, [stale])
+        results, errors = [], []
+
+        def read():
+            try:
+                results.append((store.list_graphs(), store.quads()))
+            except Exception as e:  # recorded and asserted on below
+                errors.append(e)
+
+        threads = [threading.Thread(target=read) for _ in range(n_threads)]
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert [graphs for graphs, _ in results] == [["urn:g:a"]] * n_threads
+        assert [r["o_value"] for r in results[0][1].collect()] == ["v2"]

@@ -8,6 +8,7 @@ import textwrap
 
 import pytest
 
+from knowledge_graph_etl_spark import store as store_mod
 from knowledge_graph_etl_spark.store import GraphStore
 from knowledge_graph_etl_spark.terms import QUAD_COLUMNS, QUAD_SCHEMA
 
@@ -99,20 +100,80 @@ def _subject_store(spark, path, sizes):
         for g, n in sizes.items()
         for i in range(n)
     ]
-    store.insert(spark.createDataFrame(rows, QUAD_SCHEMA).repartition(4))
+    store.insert(
+        spark.createDataFrame(rows, QUAD_SCHEMA).repartition(4), batch_distinct=True
+    )
     return store
 
 
-def test_optimize_clusters_by_subject(spark, tmp_path):
+def _parquet_files(store):
+    """Each stored graph → the number of parquet files in its partition."""
+    out = {}
+    for g in store.list_graphs():
+        d = os.path.join(store.path, "g=" + store_mod._escape_partition_value(g))
+        out[g] = len([f for f in os.listdir(d) if f.endswith(".parquet")])
+    return out
+
+
+def test_optimize_writes_a_graph_below_the_floor_as_one_file(spark, tmp_path):
+    """A graph of fewer stored bytes than ``MIN_FILE_BYTES``, inserted as
+    several files, is compacted into exactly one file."""
+    store = _subject_store(spark, str(tmp_path / "q"), {"urn:g:a": 300, "urn:g:b": 40})
+    assert max(store._stored_bytes().values()) < store_mod.MIN_FILE_BYTES
+    assert min(_parquet_files(store).values()) > 1
+    before = {tuple(r) for r in store.quads().collect()}
+    store.optimize()
+    assert _parquet_files(store) == {"urn:g:a": 1, "urn:g:b": 1}
+    assert {tuple(r) for r in store.quads().collect()} == before
+
+
+@pytest.mark.parametrize("max_file_kib", [None, 4], ids=["floor", "max_file_bytes"])
+def test_optimize_gives_a_larger_graph_more_files(
+    spark, tmp_path, monkeypatch, max_file_kib
+):
+    """File counts follow stored bytes: one file below the floor
+    (``MIN_FILE_BYTES``); above it one per ``MIN_FILE_BYTES``, at most
+    the scan parallelism ``P``; and one per ``MAX_FILE_BYTES``, more
+    than ``P``, once a graph outgrows ``P * MAX_FILE_BYTES``. The byte
+    constants are patched down so that small graphs reach each case."""
+    kib = 1024
+    monkeypatch.setattr(store_mod, "MIN_FILE_BYTES", 4 * kib)
+    store = _subject_store(spark, str(tmp_path / "q"), {"urn:g:large": 2000})
+    store.insert_data(
+        [("urn:g:small", "urn:s:1", "iri", "urn:p:x", "v", "literal", None, None)]
+    )
+    stored = store._stored_bytes()
+    large, p = stored["urn:g:large"], spark.sparkContext.defaultParallelism
+    assert stored["urn:g:small"] < 4 * kib
+    if max_file_kib:
+        monkeypatch.setattr(store_mod, "MAX_FILE_BYTES", max_file_kib * kib)
+        want = -(-large // (max_file_kib * kib))
+        assert want > p
+    else:
+        want = p
+        assert large > 4 * kib * p
+    store.optimize()
+    assert _parquet_files(store) == {"urn:g:large": want, "urn:g:small": 1}
+    assert store.quads().count() == 2001
+
+
+def test_optimize_clusters_by_subject(spark, tmp_path, monkeypatch):
     """Subject-clustered compaction (SURVEY.md §4.3): data preserved,
-    every rewritten file sorted by ``s``, the files of one graph over
-    disjoint ``s`` ranges, and a graph much smaller than one partition's
-    share of the compaction written as one file. Inside a file the rows
-    are in whole-quad order, nulls first as Spark sorts them."""
+    every rewritten file sorted by ``s``, the files of a multi-file graph
+    over disjoint ``s`` ranges, and a graph below the floor
+    (``MIN_FILE_BYTES``, patched down to the small graph's stored bytes)
+    written as one file. Inside a file the rows are in whole-quad order,
+    nulls first as Spark sorts them."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "q")
-    store = _subject_store(spark, path, {"urn:g:a": 100, "urn:g:small": 3})
+    store = _subject_store(spark, path, {"urn:g:a": 100})
+    store.insert_data(
+        [
+            ("urn:g:small", f"urn:s:{i:05d}", "iri", "urn:p:x", f"v{i}", "literal", None, None)
+            for i in range(3)
+        ]
+    )
     # subjects with several predicates and objects, some typed or tagged
     store.insert_data(
         [
@@ -127,8 +188,11 @@ def test_optimize_clusters_by_subject(spark, tmp_path):
             ]
         ]
     )
+    monkeypatch.setattr(
+        store_mod, "MIN_FILE_BYTES", store._stored_bytes()["urn:g:small"]
+    )
     before = {tuple(r) for r in store.quads().collect()}
-    store.optimize(target_files=4)
+    store.optimize()
     assert {tuple(r) for r in store.quads().collect()} == before
     rows = {}  # partition directory → the rows of each file, g left out
     for name in os.listdir(path):
@@ -197,18 +261,43 @@ def test_every_store_file_is_zstd_parquet(spark, tmp_path, mutation):
 
 
 def test_optimize_runs_one_compaction_whatever_the_graph_count(
-    spark, tmp_path, count_jobs
+    spark, tmp_path, count_jobs, monkeypatch
 ):
     """All graphs are compacted by one rewrite: a 3-graph store costs no
-    more Spark jobs than a 1-graph store."""
-    one = _subject_store(spark, str(tmp_path / "one"), {"urn:g:a": 300})
-    three = _subject_store(
-        spark,
-        str(tmp_path / "three"),
-        {"urn:g:a": 300, "urn:g:b": 300, "urn:g:c": 300},
+    more Spark jobs than a 1-graph store, whether its graphs are one file
+    each (hash-partitioned by ``g``: no sampling job) or several (one
+    range partitioning: one sampling job for all of them), and a store
+    mixing both kinds costs no more than one graph of each kind."""
+
+    def optimize(name, sizes):
+        store = _subject_store(spark, str(tmp_path / name), sizes)
+        jobs = len(count_jobs(store.optimize))
+        assert store.quads().count() == sum(sizes.values())
+        return jobs, _parquet_files(store)
+
+    three = {"urn:g:a": 300, "urn:g:b": 300, "urn:g:c": 300}
+    one_jobs, files = optimize("one", {"urn:g:a": 300})
+    assert files == {"urn:g:a": 1}
+    jobs, files = optimize("three", three)
+    assert set(files.values()) == {1}
+    assert jobs <= one_jobs
+
+    # from here on a 300-subject graph is several files, a 3-subject one
+    # is still one
+    monkeypatch.setattr(store_mod, "MIN_FILE_BYTES", 2 * 1024)
+    one_jobs, files = optimize("one_many", {"urn:g:a": 300})
+    assert files["urn:g:a"] > 1
+    jobs, files = optimize("three_many", three)
+    assert min(files.values()) > 1
+    assert jobs <= one_jobs
+    one_jobs, files = optimize("mixed_two", {"urn:g:a": 300, "urn:g:x": 3})
+    assert files["urn:g:x"] == 1 < files["urn:g:a"]
+    jobs, files = optimize(
+        "mixed_six", {**three, "urn:g:x": 3, "urn:g:y": 3, "urn:g:z": 3}
     )
-    assert len(count_jobs(three.optimize)) <= len(count_jobs(one.optimize))
-    assert three.quads().count() == 900
+    assert min(files[g] for g in three) > 1
+    assert [files[g] for g in ("urn:g:x", "urn:g:y", "urn:g:z")] == [1, 1, 1]
+    assert jobs <= one_jobs
 
 
 def test_parquet_insert_data_runs_one_job_with_set_semantics(
